@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -42,6 +42,36 @@ D8_OFFSETS = [
     (0, 1, 0), (1, 1, 1), (2, 0, 1), (3, -1, 1),
     (4, -1, 0), (5, -1, -1), (6, 0, -1), (7, 1, -1),
 ]
+
+
+def _checkpoint_with(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
+    """Eager localCheckpoint of ``df`` and the value of the aggregate
+    ``metric`` over it (a row count, a drain probe), observed by the
+    checkpoint job itself instead of by a job of its own."""
+    seen = Observation()
+    df = df.observe(seen, metric.alias("m")).localCheckpoint(eager=True)
+    return df, seen.get["m"]
+
+
+def _broadcast_if_small(df: DataFrame, rows: int) -> DataFrame:
+    """Hint ``df`` for broadcast when its size, ``rows`` (exact, or an
+    upper bound) × the planner's per-row width, fits the session's own
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1: never).
+
+    The D8 loops join localCheckpointed relations, and a checkpoint
+    carries the size estimate of the plan it came from: 13.5 MB for
+    the 768-cell edge relation that holds ~12 KB. Without the hint
+    every doubling round plans a SortMergeJoin and pays its shuffle
+    stages. The width is Spark's own (8 bytes of row overhead plus
+    each column's default size), so at scale, where the relation
+    outgrows the threshold, the plan is the one Spark would pick on
+    its own."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    width = 8 + df._jdf.schema().defaultSize()
+    if limit >= 0 and rows * width <= limit:
+        return F.broadcast(df)
+    return df
 
 
 def d8_directions(cells: DataFrame) -> DataFrame:
@@ -220,7 +250,7 @@ def flow_accumulation_full(edges: DataFrame,
     2n}`` — measured doubling rounds and the (constant) per-round
     state size the scale probe records.
     """
-    edges = edges.localCheckpoint(eager=True)
+    edges, n_edges = _checkpoint_with(edges, F.count(F.lit(1)))
     # child ordering within each parent: first child starts the
     # descent, next sibling continues the sweep — one shuffle on v
     w = W.partitionBy("v").orderBy("u")
@@ -234,12 +264,14 @@ def flow_accumulation_full(edges: DataFrame,
         F.col("v").alias("n"), F.col("u").alias("fc")
     )
     # one row per node: child nodes carry (parent, next sibling);
-    # roots (targets that are never sources) carry neither
+    # roots (targets that are never sources) carry neither; every
+    # relation joined here has at most |edges| rows
     roots = (
         edges.select(F.col("v").alias("n"))
         .distinct()
-        .join(edges.select(F.col("u").alias("n")).distinct(), "n",
-              "left_anti")
+        .join(_broadcast_if_small(
+            edges.select(F.col("u").alias("n")).distinct(), n_edges),
+            "n", "left_anti")
     )
     nodes = ch.select(
         F.col("u").alias("n"), F.col("v").alias("par"), "sib"
@@ -248,7 +280,7 @@ def flow_accumulation_full(edges: DataFrame,
             "n", F.lit(None).cast("long").alias("par"),
             F.lit(None).cast("long").alias("sib"),
         )
-    ).join(first_child, "n", "left")
+    ).join(_broadcast_if_small(first_child, n_edges), "n", "left")
     # Euler-tour successor, all local arithmetic: down(n)=2n enters n
     # (next: descend to first child, else bounce straight up);
     # up(n)=2n+1 leaves n (next: next sibling's descent, else leave
@@ -263,12 +295,11 @@ def flow_accumulation_full(edges: DataFrame,
         .when(F.col("par").isNotNull(), F.col("par") * 2 + 1)
         .alias("ptr"),
     )
-    arcs = down.unionByName(up).select(
+    arcs, n_arcs = _checkpoint_with(down.unionByName(up).select(
         "id", "ptr",
         F.when(F.col("ptr").isNotNull(), F.lit(1))
         .otherwise(F.lit(0)).cast("long").alias("d"),
-    ).localCheckpoint(eager=True)
-    n_arcs = arcs.count()
+    ), F.count(F.lit(1)))
     # weighted list ranking: each round jumps 2^k arcs ahead, summing
     # the carried distance — state is exactly n_arcs rows per round
     rounds_run = 0
@@ -284,11 +315,11 @@ def flow_accumulation_full(edges: DataFrame,
     #    costs (isEmpty + localCheckpoint were ~0.3 s/round). An extra
     #    no-op jump after drain is identity.
     for r in range(max_rounds):
-        hop = arcs.select(
+        hop = _broadcast_if_small(arcs.select(
             F.col("id").alias("ptr"),
             F.col("ptr").alias("p2"),
             F.col("d").alias("d2"),
-        )
+        ), n_arcs)
         arcs = arcs.join(hop, "ptr", "left").select(
             "id",
             F.col("p2").alias("ptr"),
@@ -296,8 +327,8 @@ def flow_accumulation_full(edges: DataFrame,
         )
         rounds_run += 1
         if r % 2 == 1 or r == max_rounds - 1:
-            arcs = arcs.localCheckpoint(eager=True)
-            if arcs.where(F.col("ptr").isNotNull()).isEmpty():
+            arcs, live = _checkpoint_with(arcs, F.count("ptr"))
+            if live == 0:
                 drained = True
                 break
     if stats is not None:
@@ -315,7 +346,7 @@ def flow_accumulation_full(edges: DataFrame,
     # the edge set was cyclic (not a forest) or the tour outran
     # 2^max_rounds arcs — either way the dd-du subtree formula below
     # would return silently WRONG counts, so refuse instead. The check
-    # costs nothing when the loop broke: its own isEmpty proved drain.
+    # costs nothing when the loop broke: its own drain probe proved it.
     if not drained:
         undrained = arcs.where(F.col("ptr").isNotNull())
         if not undrained.isEmpty():
@@ -407,17 +438,18 @@ def watershed_roots(edges: DataFrame, cells_ids: DataFrame,
     measured ``{"rounds": r}`` for the scale probe.
     """
     pits = cells_ids.join(edges.select("u").distinct(), "u", "left_anti")
-    parent = edges.unionByName(
+    # one row per cell (pits self-loop), in every round
+    parent, n_cells = _checkpoint_with(edges.unionByName(
         pits.select("u", F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
+    ), F.count(F.lit(1)))
     rounds_run = 0
     for r in range(rounds):
         prev = parent
         parent = (
             parent.join(
-                parent.select(
+                _broadcast_if_small(parent.select(
                     F.col("u").alias("v"), F.col("v").alias("w")
-                ),
+                ), n_cells),
                 "v",
             )
             .select("u", F.col("w").alias("v"))

@@ -17,6 +17,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -48,8 +49,57 @@ def register(
     return deco
 
 
+# Parquet schema memo for load_tables: (qualified path, length, mtime,
+# inference confs) -> the StructType spark.read.parquet inferred. The
+# inference is a Spark job (a footer read scheduled as one task) on
+# every read, ~70-85 ms each, paid again by every query construction.
+_SCHEMAS: dict[tuple, StructType] = {}
+# the confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str, confs: tuple) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only the first
+    time a given file version is read (see :func:`load_tables`)."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(hpath)
+    except Py4JJavaError:
+        st = None  # missing path: the reader raises its usual error
+    if st is None or st.isDirectory():
+        # a directory's status does not change when a file inside it is
+        # rewritten in place, so it cannot key the memo
+        return spark.read.parquet(path)
+    key = (st.getPath().toString(), st.getLen(), st.getModificationTime(), confs)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     """Read driver testdata parquet tables (TESTDATA.md).
+
+    Schemas are memoized: the first read of a file infers its schema
+    (one Spark job), later reads pass the remembered ``StructType`` to
+    ``spark.read.schema(...)`` and run no job. The memo key is the
+    file's qualified path, length and modification time (one Hadoop
+    ``getFileStatus``, no job) plus the confs that steer parquet
+    schema inference (``nanosAsLong`` among them). It assumes the same
+    path, length and mtime mean the same footer: a rewritten file gets
+    a new mtime (and usually a new length), so it is inferred again.
+    Directory paths are not memoized; they are inferred on every read.
 
     ``events.ts`` has shipped in two parquet physical types across
     driver testdata generations; both are normalized to a plain
@@ -76,10 +126,11 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame
     # timezone; DuckDB oracles are tz-naive. Pin UTC so results don't
     # depend on the caller's system zone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
 
     out = []
     for n in names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{n}.parquet", confs)
         if "ts" in df.columns:
             ts_type = df.schema["ts"].dataType
             if isinstance(ts_type, LongType):

@@ -79,7 +79,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair. Deduplicating per document FIRST (array_distinct before
     # the explode, scan-local) makes df a plain count with map-side
     # partial aggregation: count(distinct doc per term) == count of
-    # per-doc-distinct term occurrences, exactly.
+    # per-doc-distinct term occurrences, exactly. Precondition: doc_id
+    # is unique and non-null in `documents` (one row per document) —
+    # a duplicated doc_id would count twice here and once in the
+    # oracle's COUNT(DISTINCT doc_id), a null one here and not there.
+    # tests/test_pipeline_ops.py asserts it on the testdata.
     df = (
         spread(documents)
         .select(F.explode(F.array_distinct(tokens("text"))).alias("term"))

@@ -65,7 +65,19 @@ ORACLE_SMOKE = {
 }
 
 
+def missing_slow_test_files() -> list[str]:
+    """SLOW_TEST_FILES entries that name no file in tests/: a renamed
+    slow file would otherwise drop back into the default tier, and the
+    stale entry would match nothing."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    return sorted(
+        f for f in SLOW_TEST_FILES if not os.path.isfile(os.path.join(here, f))
+    )
+
+
 def pytest_collection_modifyitems(config, items):
+    missing = missing_slow_test_files()
+    assert not missing, f"SLOW_TEST_FILES names missing test files: {missing}"
     if RUN_SLOW_TESTS:
         return
     skip_slow = pytest.mark.skip(

@@ -371,3 +371,23 @@ def test_lsh_parameter_plan_s_curve_properties(run):
             (k[0], v["p_catch"]) for k, v in by_key.items() if k[1] == rr
         )
         assert all(a[1] <= b[1] + 1e-9 for a, b in zip(seq, seq[1:]))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_documents_doc_id_unique_and_non_null(sf_dir, sf):
+    # tfidf_top_terms' single-pass df counts per-row distinct terms,
+    # which equals the oracle's COUNT(DISTINCT doc_id) only when every
+    # document row has its own non-null doc_id
+    import os
+
+    import duckdb
+
+    path = os.path.join(os.path.dirname(sf_dir), sf, "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no {sf} testdata next to {sf_dir}")
+    rows, non_null, distinct = duckdb.sql(
+        f"SELECT count(*), count(doc_id), count(DISTINCT doc_id) FROM '{path}'"
+    ).fetchone()
+    assert rows > 0
+    assert non_null == rows
+    assert distinct == rows

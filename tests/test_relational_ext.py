@@ -193,3 +193,69 @@ def test_pagerank_scores_sum_to_one(spark, sf_dir):
     scores = [r["score"] for r in rows]
     assert scores == sorted(scores, reverse=True)
     assert sum(scores) < 1.0
+
+
+def test_pagerank_edge_layout_one_partition_at_fixture_scale(spark, sf_dir):
+    # the cached edge list is sized from the lineitem scan's plan size:
+    # one partition at fixture scale, with no counting job
+    import re
+
+    from biggis_landuse_spark import queries
+
+    queries.release_caches()
+    try:
+        REGISTRY["pagerank_suppliers"].spark(spark, sf_dir)
+        edges_w = queries._ACTIVE_CACHES[0]
+        plan = edges_w._jdf.queryExecution().analyzed().toString()
+        assert re.search(r"RepartitionByExpression \[src#\d+L\], 1\b", plan), plan
+    finally:
+        queries.release_caches()
+
+
+def test_local_supplier_volume_rounds_a_revenue_tie_exactly(spark, tmp_path):
+    # one ASIA line of 2.01 at a 50% discount: revenue is exactly 1.005,
+    # a 2-dp tie. As a double the product is 1.00499999999999989...,
+    # which Spark's round (of the shortest repr "1.005") takes up and
+    # DuckDB's (of the binary value) takes down; the exact DECIMAL sum
+    # rounds it up on both engines
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    i64 = pa.int64()
+    tables = {
+        "region": {"r_regionkey": pa.array([0], i64), "r_name": ["ASIA"]},
+        "nation": {
+            "n_nationkey": pa.array([0], i64), "n_name": ["JAPAN"],
+            "n_regionkey": pa.array([0], i64),
+        },
+        "supplier": {"s_suppkey": pa.array([0], i64),
+                     "s_nationkey": pa.array([0], i64)},
+        "customer": {"c_custkey": pa.array([0], i64),
+                     "c_nationkey": pa.array([0], i64)},
+        "orders": {"o_orderkey": pa.array([0], i64),
+                   "o_custkey": pa.array([0], i64)},
+        "lineitem": {
+            "l_orderkey": pa.array([0], i64), "l_suppkey": pa.array([0], i64),
+            "l_extendedprice": [2.01], "l_discount": [0.5],
+        },
+    }
+    con = duckdb.connect()
+    for name, cols in tables.items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table(cols), path)
+        con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+
+    spec = REGISTRY["local_supplier_volume"]
+    got = [tuple(r) for r in spec.spark(spark, str(tmp_path)).collect()]
+    want = con.sql(spec.oracle).fetchall()
+    assert got == want == [("JAPAN", 1, 1.01)]
+    # the input really is a tie on which the double forms disagree
+    double_duck = con.sql(
+        "SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) FROM lineitem"
+    ).fetchone()[0]
+    double_spark = spark.sql(
+        "SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS r "
+        f"FROM parquet.`{tmp_path / 'lineitem.parquet'}`"
+    ).first()["r"]
+    assert (double_duck, double_spark) == (1.0, 1.01)
