@@ -185,6 +185,30 @@ COMPACT_QUERIES = (
 COMPACT_LINE_BUDGET = 1950
 
 
+def shed_to_budget(
+    compact: dict, timings: dict, budget: int = COMPACT_LINE_BUDGET
+) -> str:
+    """The compact line as JSON, within ``budget`` bytes.
+
+    Tail-window guard: a clipped final line parses as null at the
+    driver, which loses the WHOLE record. While the line is over
+    budget, drop ``compact["queries"]`` entries (deterministic; the
+    full map is still in the detail sidecar): plain queries first, then
+    NORM_BASKET members, canaries last — cheapest first within each
+    class."""
+
+    def shed_rank(name: str) -> tuple:
+        return (
+            name in CANARY_QUERIES, name in NORM_BASKET, timings.get(name, 0.0)
+        )
+
+    line = json.dumps(compact)
+    while len(line) > budget and compact["queries"]:
+        compact["queries"].pop(min(compact["queries"], key=shed_rank))
+        line = json.dumps(compact)
+    return line
+
+
 def _load_baseline_table(path: str) -> dict[str, float]:
     """Parse the per-query `| name | sec |` rows from BASELINE.md.
 
@@ -523,23 +547,7 @@ def main() -> None:
     if errors:
         compact["partial_total"] = total
         compact["errors_n"] = len(errors)
-    # tail-window guard: a clipped final line parses as null at the
-    # driver, which loses the WHOLE record — if the line ever outgrows
-    # the budget, shed the smallest-time non-canary/non-basket query
-    # entries first (deterministic, and the full map is still in the
-    # detail sidecar)
-    protected = set(CANARY_QUERIES) | set(NORM_BASKET)
-    line = json.dumps(compact)
-    while len(line) > COMPACT_LINE_BUDGET:
-        droppable = [
-            n for n in compact["queries"]
-            if n not in protected and n in timings
-        ]
-        if not droppable:
-            break
-        compact["queries"].pop(min(droppable, key=lambda n: timings[n]))
-        line = json.dumps(compact)
-    print(line)
+    print(shed_to_budget(compact, timings))
     spark.stop()
     if errors:
         sys.exit(1)

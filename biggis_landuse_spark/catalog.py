@@ -1,4 +1,4 @@
-"""Layer catalog: Parquet-backed tile storage + metadata/attribute tables.
+"""Layer catalog: Parquet-backed tile storage + a JSON attribute store.
 
 Replaces the reference's HDFS AttributeStore + Avro layer
 readers/writers + SFC index (api/package.scala:62-385):
@@ -8,32 +8,108 @@ readers/writers + SFC index (api/package.scala:62-385):
   within files by a Z-order (Morton) key over (tile_col, tile_row) so
   Parquet row-group min/max stats prune spatial ranges — the exact
   role of the reference's ZCurveKeyIndexMethod (api/package.scala:143).
-- ``{base}/layers/`` — one metadata row per (layer, zoom)
-  (TileLayerMetadata analog, inferred from the data at write time like
-  TileLayerMetadata.fromRDD, GeotiffTilingExample.scala:50).
-- ``{base}/attributes/`` — JSON attribute store rows
-  (Utils.writeHistogram / readHistogram analog, Utils.scala:78-89).
+- ``{base}/layers/<layer>/<zoom>.json`` — one metadata record per
+  (layer, zoom) (TileLayerMetadata analog, taken from the write job
+  itself like TileLayerMetadata.fromRDD, GeotiffTilingExample.scala:50).
+- ``{base}/attributes/<layer>/<zoom>/<name>.json`` — one record per
+  attribute (the reference's HadoopAttributeStore; Utils.writeHistogram
+  / readHistogram, Utils.scala:78-89).
 
-Scale: writes never collect tiles; metadata inference is one small agg
-job; deletes drop whole partition directories.
+Layer and attribute names are percent-encoded in file names, so any
+string round-trips.
+
+Concurrency: every record is its own file, published by writing a
+uniquely named temp file and renaming it over the target
+(``write_json``). Writers of different keys never touch the same file,
+so concurrent per-layer ingests share one catalog with no lock and no
+read-modify-write; writers of the same key replace the whole record
+(last rename wins), and a reader never sees a torn one.
+
+Scale: writes never collect tiles; the metadata is observed on the
+write job and the histogram is one agg pass over the written tile
+column; reads list and read small files on the driver, with no Spark job;
+deletes drop whole directories.
 """
 
 from __future__ import annotations
 
 import json
-import threading
+import uuid
+from urllib.parse import quote, unquote
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from biggis_landuse_spark.model import ATTRIBUTE_SCHEMA, LAYER_META_SCHEMA
-
-# serializes the read-modify-write metadata/attribute upserts so
-# concurrent per-layer ingest jobs (operators.reproject.
-# ingest_layers_webmercator) can share one catalog safely
-_META_LOCK = threading.RLock()
+from biggis_landuse_spark.model import LAYER_META_SCHEMA
 
 Z_BITS = 16
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem
+    API, so every op works on any supported scheme (local FS, HDFS,
+    S3A), not just os.path-reachable local paths."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def write_json(
+    spark: SparkSession, path: str, record, overwrite: bool = True
+) -> bool:
+    """Publish ``record`` as the JSON file ``path`` atomically: write a
+    uniquely named ``*.tmp`` file beside it, then rename. With
+    ``overwrite`` the rename replaces an existing file
+    (``FileContext.rename`` with ``Options.Rename.OVERWRITE``);
+    without it the rename fails when ``path`` exists, and this removes
+    the temp file and returns False. A crash before the rename leaves
+    only a ``*.tmp`` file, which readers never list."""
+    jvm = spark._jvm
+    fs, final = hadoop_path(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.{uuid.uuid4().hex}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(json.dumps(record).encode("utf-8")))
+    finally:
+        out.close()
+    if overwrite:
+        rename = jvm.org.apache.hadoop.fs.Options.Rename
+        opts = spark.sparkContext._gateway.new_array(rename, 1)
+        opts[0] = rename.OVERWRITE
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            final.toUri(), spark._jsc.hadoopConfiguration()
+        ).rename(tmp, final, opts)
+        return True
+    if fs.rename(tmp, final):
+        return True
+    fs.delete(tmp, False)
+    return False
+
+
+def read_json(spark: SparkSession, path: str):
+    """The record ``write_json`` published at ``path``, or None."""
+    fs, p = hadoop_path(spark, path)
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as e:
+        missing = "java.io.FileNotFoundException"
+        if e.java_exception.getClass().getName() != missing:
+            raise
+        return None
+    try:
+        data = bytes(
+            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        )
+    finally:
+        stream.close()
+    return json.loads(data.decode("utf-8"))
+
+
+def _enc(name: str) -> str:
+    """Reversible file-name form of a layer or attribute name ('.'
+    too, so no name becomes '.', '..' or a hidden file)."""
+    return quote(name, safe="").replace(".", "%2E")
 
 
 def zorder_key(col: str = "tile_col", row: str = "tile_row") -> F.Column:
@@ -137,8 +213,8 @@ class LayerCatalog:
         index_method: str = "zorder",
     ) -> None:
         """Write a tile DataFrame as (layer, zoom), globally SFC-ordered
-        across ``target_files`` files, and upsert the inferred
-        metadata row.
+        across ``target_files`` files, and publish its metadata record
+        and histogram attribute.
 
         ``index_method``: "zorder" (default, Morton interleave) or
         "hilbert" (locality-equivalent Hilbert keying — the same
@@ -162,6 +238,9 @@ class LayerCatalog:
         makes spatial-range reads prune files like the reference's
         Z-curve index ranges (api/package.scala:143).
         """
+        from pyspark import StorageLevel
+        from pyspark.sql import Observation
+
         keyed = tiles.withColumn("layer", F.lit(layer)).withColumn(
             "zoom", F.lit(zoom)
         )
@@ -185,6 +264,9 @@ class LayerCatalog:
             if target_files is not None
             else self.spark.sparkContext.defaultParallelism
         )
+        t = F.col("tile")
+        cells = F.flatten(t["bands"])
+        observed = Observation()
         # repartitionByRange needs a range-SAMPLING pass before the
         # write pass, so an unmaterialized input executes its whole
         # upstream plan twice — for the lazy ingest chain (chunked
@@ -193,13 +275,26 @@ class LayerCatalog:
         # band of which ~5 s is the chain run once). Persist spills to
         # local disk past memory, trading one extra local IO pass for
         # a full recompute — the same trade at 1000 executors.
-        from pyspark import StorageLevel
-
         keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             (
                 keyed.repartitionByRange(n_files, "layer", "zoom", *sort_keys)
                 .sortWithinPartitions(*sort_keys)
+                # the metadata rides on the write job; placed after the
+                # range shuffle so the sampling pass does not run it
+                .observe(
+                    observed,
+                    F.min("tile_col").alias("key_col_min"),
+                    F.max("tile_col").alias("key_col_max"),
+                    F.min("tile_row").alias("key_row_min"),
+                    F.max("tile_row").alias("key_row_max"),
+                    F.first(t["cols"]).alias("tile_cols"),
+                    F.first(t["rows"]).alias("tile_rows"),
+                    F.first(t["cell_type"]).alias("cell_type"),
+                    F.max(F.size(t["bands"])).alias("n_bands"),
+                    F.min(F.array_min(cells)).alias("lo"),
+                    F.max(F.array_max(cells)).alias("hi"),
+                )
                 .drop("_zk")
                 .write.mode("overwrite")
                 .partitionBy("layer", "zoom")
@@ -208,159 +303,64 @@ class LayerCatalog:
             )
         finally:
             keyed.unpersist()
-        # metadata + histogram read BACK from the written parquet
-        # (r8, found by the scene-scale e2e): computing them from the
-        # input relation re-executed the whole upstream pipeline —
-        # with the lazy ingest chain (decode → warp → reassembly)
-        # that made one write_layer cost ~4 full passes (range-
-        # partitioner sampling + write + metadata + histogram). The
-        # written layer is byte-identical input for both, and the
-        # post-write scans are cheap columnar reads.
-        written = self.read_layer(layer, zoom).withColumn(
-            "layer", F.lit(layer)
-        ).withColumn("zoom", F.lit(zoom))
-        meta = self._infer_metadata(written, layer, zoom, crs)
-        self._upsert_layer_row(meta)
-        self.write_attribute(
-            layer, zoom, "histogramData", self._histogram_json(written)
-        )
-
-    def _infer_metadata(
-        self, tiles: DataFrame, layer: str, zoom: int, crs: str
-    ) -> dict:
-        t = F.col("tile")
-        row = (
-            tiles.agg(
-                F.min("tile_col").alias("key_col_min"),
-                F.max("tile_col").alias("key_col_max"),
-                F.min("tile_row").alias("key_row_min"),
-                F.max("tile_row").alias("key_row_max"),
-                F.first(t["cols"]).alias("tile_cols"),
-                F.first(t["rows"]).alias("tile_rows"),
-                F.first(t["cell_type"]).alias("cell_type"),
-                F.max(F.size(t["bands"])).alias("n_bands"),
-            )
-        ).first()
-        return {
+        m = observed.get
+        # the histogram reads the written partition back, tile column
+        # only, with the schema known (no inference job): the write
+        # refreshes every cached plan that reads the tiles path, so an
+        # input derived from catalog layers (NDVI, pyramid levels)
+        # would recompute its whole upstream from the persisted plan
+        part = f"layer={self._partition_dir(layer)}/zoom={zoom}"
+        written = self.spark.read.schema(
+            T.StructType([keyed.schema["tile"]])
+        ).parquet(f"{self.tiles_path}/{part}")
+        histogram = _histogram_json(written, m["lo"], m["hi"])
+        meta = {
             "layer": layer,
             "zoom": zoom,
-            "cell_type": row["cell_type"],
+            "cell_type": m["cell_type"],
             "crs": crs,
-            "n_bands": row["n_bands"],
-            "tile_cols": row["tile_cols"],
-            "tile_rows": row["tile_rows"],
-            "layout_cols": row["key_col_max"] - row["key_col_min"] + 1,
-            "layout_rows": row["key_row_max"] - row["key_row_min"] + 1,
-            "key_col_min": row["key_col_min"],
-            "key_col_max": row["key_col_max"],
-            "key_row_min": row["key_row_min"],
-            "key_row_max": row["key_row_max"],
+            "n_bands": m["n_bands"],
+            "tile_cols": m["tile_cols"],
+            "tile_rows": m["tile_rows"],
+            "layout_cols": m["key_col_max"] - m["key_col_min"] + 1,
+            "layout_rows": m["key_row_max"] - m["key_row_min"] + 1,
+            "key_col_min": m["key_col_min"],
+            "key_col_max": m["key_col_max"],
+            "key_row_min": m["key_row_min"],
+            "key_row_max": m["key_row_max"],
             "extent": None,
         }
-
-    def _histogram_json(self, tiles: DataFrame, n_buckets: int = 16) -> str:
-        """Layer histogram attribute (reference: rdd.histogram written
-        at zoom 0, api/package.scala:146).
-
-        Bounds and counts come from the SAME all-band pixel relation,
-        so multiband layers get true lo/hi (not band-0-only clamps).
-        """
-        t = F.col("tile")
-        values = (
-            tiles.select(F.explode(t["bands"]).alias("b"))
-            .select(F.explode("b").alias("v"))
-            .where(F.col("v").isNotNull())
-        )
-        bounds = values.agg(
-            F.min("v").alias("lo"), F.max("v").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        if lo is None or hi is None or hi == lo:
-            return json.dumps({"lo": lo, "hi": hi, "counts": []})
-        step = (hi - lo) / n_buckets
-        counts = (
-            values
-            .groupBy(
-                F.least(
-                    F.greatest(
-                        F.floor((F.col("v") - F.lit(lo)) / F.lit(step)), F.lit(0)
-                    ),
-                    F.lit(n_buckets - 1),
-                ).alias("bucket")
-            )
-            .count()
-            .orderBy("bucket")
-            .collect()
-        )
-        return json.dumps(
-            {
-                "lo": lo,
-                "hi": hi,
-                "counts": [[int(r["bucket"]), int(r["count"])] for r in counts],
-            }
-        )
-
-    def _upsert_layer_row(self, meta: dict) -> None:
-        # the metadata upsert is a read-modify-write of a tiny table:
-        # the ONE part of write_layer that is not safe under
-        # concurrent per-layer ingest jobs (the data writes commit
-        # disjoint (layer, zoom) partitions through per-job dynamic-
-        # overwrite staging dirs). Serialize it process-wide.
-        with _META_LOCK:
-            new_row = self._local_df([meta], LAYER_META_SCHEMA)
-            existing = self.layers()
-            merged = existing.where(
-                ~((F.col("layer") == meta["layer"])
-                  & (F.col("zoom") == meta["zoom"]))
-            ).unionByName(new_row)
-            self._rewrite_small_table(
-                merged, self.layers_path, LAYER_META_SCHEMA
-            )
-
-    def _rewrite_small_table(self, df: DataFrame, path: str, schema) -> None:
-        rows = df.collect()  # metadata tables are tiny by construction
-        out = self._local_df(rows, schema)
-        out.coalesce(1).write.mode("overwrite").parquet(path)
-
-    def _local_df(self, rows: list, schema) -> DataFrame:
-        """Tiny driver-local rows → DataFrame via the Arrow/pandas
-        path (session.local_df). A plain ``createDataFrame(list)``
-        plans a PYTHON RDD scan, so every metadata write paid ~4.5 s
-        of Python-worker spin-up for a one-row table (r10, found
-        profiling scene ingest: upsert + attribute write cost more
-        than the layer write itself); the pandas route converts
-        through Arrow into a JVM-local relation — 0.15 s."""
-        from biggis_landuse_spark.session import local_df
-
-        return local_df(self.spark, rows, schema)
+        write_json(self.spark, self._meta_path(layer, zoom), meta)
+        self.write_attribute(layer, zoom, "histogramData", histogram)
 
     # -- read --------------------------------------------------------------
 
     def layers(self) -> DataFrame:
-        if not self._exists(self.layers_path):
-            return self.spark.createDataFrame([], schema=LAYER_META_SCHEMA)
-        return self.spark.read.parquet(self.layers_path)
+        """Every metadata record as a ``LAYER_META_SCHEMA`` relation
+        (the SQL surface's ``catalog_layers`` view)."""
+        from biggis_landuse_spark.session import local_df
+
+        rows = [self._meta(layer, zoom) for layer, zoom in self.layer_ids()]
+        return local_df(
+            self.spark, [r for r in rows if r is not None], LAYER_META_SCHEMA
+        )
 
     def layer_ids(self) -> list[tuple[str, int]]:
         """All (layer, zoom) pairs (reference: attributeStore.layerIds,
         api/package.scala:108-122)."""
         return [
-            (r["layer"], r["zoom"])
-            for r in self.layers().select("layer", "zoom").collect()
+            (layer, zoom)
+            for layer in sorted(map(unquote, self._list(self.layers_path)))
+            for zoom in self._zooms(layer)
         ]
 
     def finest_zoom(self, layer: str) -> int:
         """Reference: zoomsOfLayer ... maxBy(_.zoom)
         (NDVILayerExample.scala:95-103)."""
-        row = (
-            self.layers()
-            .where(F.col("layer") == layer)
-            .agg(F.max("zoom").alias("z"))
-            .first()
-        )
-        if row is None or row["z"] is None:
+        zooms = self._zooms(layer)
+        if not zooms:
             raise KeyError(f"layer not found: {layer}")
-        return row["z"]
+        return zooms[-1]
 
     def layer_crs(self, layer: str, zoom: int | None = None) -> str:
         """Grid CRS recorded for (layer, zoom) — zoom=None means any
@@ -368,13 +368,11 @@ class LayerCatalog:
         stacking alignment check reads this (reference:
         tilesmerged.metadata.crs != tiles.metadata.crs,
         ManyLayersToMultibandLayer.scala:244)."""
-        sel = self.layers().where(F.col("layer") == layer)
-        if zoom is not None:
-            sel = sel.where(F.col("zoom") == zoom)
-        row = sel.select("crs").first()
-        if row is None:
+        zooms = self._zooms(layer) if zoom is None else [zoom]
+        meta = self._meta(layer, zooms[0]) if zooms else None
+        if meta is None:
             raise KeyError(f"layer not found: {layer}")
-        return row["crs"]
+        return meta["crs"]
 
     def read_layer(
         self,
@@ -412,27 +410,18 @@ class LayerCatalog:
         """Drop one zoom or all zooms of a layer, including metadata and
         attributes (S5; reference: deleteLayerFromCatalog /
         deleteZoomLevelFromLayer, api/package.scala:67-102)."""
-        zooms = (
-            [zoom]
-            if zoom is not None
-            else [z for (l, z) in self.layer_ids() if l == layer]
-        )
-        for z in zooms:
-            self._delete_dir(f"{self.tiles_path}/layer={layer}/zoom={z}")
+        tiles = f"{self.tiles_path}/layer={self._partition_dir(layer)}"
         if zoom is None:
-            # leftover dirs, like the reference
-            self._delete_dir(f"{self.tiles_path}/layer={layer}")
-        keep = ~(
-            (F.col("layer") == layer)
-            & (F.col("zoom").isin(zooms) if zoom is not None else F.lit(True))
-        )
-        self._rewrite_small_table(
-            self.layers().where(keep), self.layers_path, LAYER_META_SCHEMA
-        )
-        if self._exists(self.attributes_path):
-            self._rewrite_small_table(
-                self.attributes().where(keep), self.attributes_path, ATTRIBUTE_SCHEMA
-            )
+            # every zoom, and the leftover dirs, like the reference
+            paths = [tiles, self._meta_path(layer), self._attr_dir(layer)]
+        else:
+            paths = [
+                f"{tiles}/zoom={zoom}",
+                self._meta_path(layer, zoom),
+                self._attr_dir(layer, zoom),
+            ]
+        for path in paths:
+            self._delete_dir(path)
 
     # -- merge (layer update) ----------------------------------------------
 
@@ -483,12 +472,7 @@ class LayerCatalog:
         sorted key ranges per file). Same staging discipline as merge:
         never read and overwrite a partition in one job.
         """
-        meta = (
-            self.layers()
-            .where((F.col("layer") == layer) & (F.col("zoom") == zoom))
-            .select("crs")
-            .first()
-        )
+        meta = self._meta(layer, zoom)
         current = self.read_layer(layer, zoom)
         tmp = f"{self.base}/_staging/compact/{layer}/{zoom}"
         current.write.mode("overwrite").parquet(tmp)
@@ -505,57 +489,83 @@ class LayerCatalog:
     # -- attributes (S19) ---------------------------------------------------
 
     def write_attribute(self, layer: str, zoom: int, name: str, payload: str) -> None:
-        with _META_LOCK:
-            new_row = self._local_df(
-                [{"layer": layer, "zoom": zoom, "name": name,
-                  "json": payload}],
-                ATTRIBUTE_SCHEMA,
-            )
-            merged = self.attributes().where(
-                ~(
-                    (F.col("layer") == layer)
-                    & (F.col("zoom") == zoom)
-                    & (F.col("name") == name)
-                )
-            ).unionByName(new_row)
-            self._rewrite_small_table(
-                merged, self.attributes_path, ATTRIBUTE_SCHEMA
-            )
-
-    def attributes(self) -> DataFrame:
-        if not self._exists(self.attributes_path):
-            return self.spark.createDataFrame([], schema=ATTRIBUTE_SCHEMA)
-        return self.spark.read.parquet(self.attributes_path)
+        write_json(
+            self.spark,
+            f"{self._attr_dir(layer, zoom)}/{_enc(name)}.json",
+            {"layer": layer, "zoom": zoom, "name": name, "json": payload},
+        )
 
     def read_attribute(self, layer: str, zoom: int, name: str) -> str | None:
-        rows = (
-            self.attributes()
-            .where(
-                (F.col("layer") == layer)
-                & (F.col("zoom") == zoom)
-                & (F.col("name") == name)
-            )
-            .select("json")
-            .collect()
+        record = read_json(
+            self.spark, f"{self._attr_dir(layer, zoom)}/{_enc(name)}.json"
         )
-        return rows[0]["json"] if rows else None
+        return None if record is None else record["json"]
 
     # -- util ---------------------------------------------------------------
 
-    def _hadoop_path(self, path: str):
-        """Resolve a path through the Hadoop FileSystem API so every
-        catalog op works on any supported scheme (local FS, HDFS, S3A),
-        not just os.path-reachable local paths."""
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, p
+    def _meta_path(self, layer: str, zoom: int | None = None) -> str:
+        """The layer's metadata dir, or its (layer, zoom) record."""
+        path = f"{self.layers_path}/{_enc(layer)}"
+        return path if zoom is None else f"{path}/{zoom}.json"
 
-    def _exists(self, path: str) -> bool:
-        fs, p = self._hadoop_path(path)
-        return bool(fs.exists(p))
+    def _attr_dir(self, layer: str, zoom: int | None = None) -> str:
+        path = f"{self.attributes_path}/{_enc(layer)}"
+        return path if zoom is None else f"{path}/{zoom}"
+
+    def _meta(self, layer: str, zoom: int) -> dict | None:
+        return read_json(self.spark, self._meta_path(layer, zoom))
+
+    def _zooms(self, layer: str) -> list[int]:
+        """The layer's zooms with a metadata record, ascending."""
+        return sorted(
+            int(name[: -len(".json")])
+            for name in self._list(self._meta_path(layer))
+            if name.endswith(".json")
+        )
+
+    def _partition_dir(self, layer: str) -> str:
+        """The tile partition directory's form of ``layer``: the write
+        escapes partition values the way Spark's partition discovery
+        unescapes them."""
+        utils = self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+        return utils.ExternalCatalogUtils.escapePathName(layer)
+
+    def _list(self, path: str) -> list[str]:
+        """Entry names under ``path`` ([] when it does not exist)."""
+        fs, p = hadoop_path(self.spark, path)
+        if not fs.exists(p):
+            return []
+        return [st.getPath().getName() for st in fs.listStatus(p)]
 
     def _delete_dir(self, path: str) -> None:
-        fs, p = self._hadoop_path(path)
-        if fs.exists(p):
-            fs.delete(p, True)
+        fs, p = hadoop_path(self.spark, path)
+        fs.delete(p, True)
+
+
+def _histogram_json(tiles: DataFrame, lo, hi, n_buckets: int = 16) -> str:
+    """Layer histogram attribute (reference: rdd.histogram written at
+    zoom 0, api/package.scala:146) over every band's cells of the
+    written layer, between the write's observed ``lo`` and ``hi``: one
+    global agg with one ``count_if`` column per bucket, so the counts
+    take one pass and no grouping or sort."""
+    if lo is None or hi is None or hi == lo:
+        return json.dumps({"lo": lo, "hi": hi, "counts": []})
+    step = (hi - lo) / n_buckets
+    v = F.col("v")
+    bucket = F.least(
+        F.greatest(F.floor((v - F.lit(lo)) / F.lit(step)), F.lit(0)),
+        F.lit(n_buckets - 1),
+    )
+    row = (
+        tiles.select(F.explode(F.flatten(F.col("tile")["bands"])).alias("v"))
+        .select(bucket.alias("bucket"))
+        .agg(*[F.count_if(F.col("bucket") == i) for i in range(n_buckets)])
+        .first()
+    )
+    return json.dumps(
+        {
+            "lo": lo,
+            "hi": hi,
+            "counts": [[i, int(c)] for i, c in enumerate(row) if c],
+        }
+    )

@@ -52,13 +52,6 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_WORDS) -> Column:
     )
 
 
-def word_shingles(text: Column | str, k: int = SHINGLE_WORDS) -> Column:
-    """k-word shingles directly from text — convenience form for
-    single-use expressions. Hot paths use shingles_from_tokens over a
-    materialized token column instead (see its docstring)."""
-    return shingles_from_tokens(tokens(text), k)
-
-
 def _shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, shingle) pairs with duplicates, tokens materialized once."""
     tokd = df.select(F.col(id_col), tokens(text_col).alias("_toks"))

@@ -94,7 +94,12 @@ def train_ova(
     ovr = OneVsRest(
         classifier=svc, labelCol="label", featuresCol="features_vec"
     )
-    return ovr.fit(data)
+    # copy() drops each sub-model's training summary, which holds the
+    # SparkSession: once the session has run an Observation (catalog.
+    # write_layer, operators.flow), it no longer serializes, and the
+    # predict UDF's closure (which captures the model) fails with
+    # "Task not serializable". Nothing here reads the summaries.
+    return ovr.fit(data).copy()
 
 
 def predict(model: OneVsRestModel, samples: DataFrame) -> DataFrame:

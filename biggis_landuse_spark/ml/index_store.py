@@ -22,29 +22,16 @@ critical path.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _write_manifest(spark: SparkSession, path: str, meta: dict) -> None:
-    fs, p = _fs(spark, path)
-    out = fs.create(p, True)
-    out.write(bytearray(json.dumps(meta, sort_keys=True), "utf-8"))
-    out.close()
+from biggis_landuse_spark.catalog import read_json, write_json
 
 
 def _read_manifest(spark: SparkSession, path: str) -> dict:
-    # spark.read.text is the scheme-agnostic reader (py4j cannot
-    # mutate a Python bytearray through InputStream.read)
-    rows = spark.read.text(path).collect()
-    return json.loads("".join(r["value"] for r in rows))
+    meta = read_json(spark, path)
+    if meta is None:
+        raise FileNotFoundError(f"no index manifest at {path}")
+    return meta
 
 
 def save_hier_index(
@@ -61,7 +48,7 @@ def save_hier_index(
     fines.coalesce(1).write.mode("overwrite").parquet(f"{path}/fines")
     coarse.coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
     meta = {"kind": "ivf_hier", "format": 1, **(params or {})}
-    _write_manifest(fines.sparkSession, f"{path}/manifest.json", meta)
+    write_json(fines.sparkSession, f"{path}/manifest.json", meta)
 
 
 def load_hier_index(
@@ -108,7 +95,7 @@ def save_flat_index(
         f"{path}/centroids"
     )
     meta = {"kind": "ivf_flat", "format": 1, **(params or {})}
-    _write_manifest(centroids.sparkSession, f"{path}/manifest.json", meta)
+    write_json(centroids.sparkSession, f"{path}/manifest.json", meta)
 
 
 def load_flat_index(
@@ -143,7 +130,7 @@ def save_pq_codebooks(
         f"{path}/codebooks"
     )
     meta = {"kind": "pq", "format": 1, **(params or {})}
-    _write_manifest(codebooks.sparkSession, f"{path}/manifest.json", meta)
+    write_json(codebooks.sparkSession, f"{path}/manifest.json", meta)
 
 
 def load_pq_codebooks(

@@ -14,10 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _band0(tile: Column) -> Column:
-    return tile["bands"][0]
-
-
 def map_pixels(tile: Column, fn, cell_type: str | None = None) -> Column:
     """Per-cell scalar map over every band (reference: ``mapDouble``,
     e.g. the z-score step SpatialGetisOrd.scala:80)."""
@@ -128,31 +124,6 @@ def normalize(tile: Column, vmin: Column, vmax: Column) -> Column:
             (x - vmin) / (vmax - vmin)
         ),
     )
-
-
-# -- whole-tile reductions (per-row, no shuffle) ---------------------------
-
-
-def tile_sum(tile: Column) -> Column:
-    """Sum of data cells in band 0 (NULLs skipped)."""
-    return F.aggregate(
-        F.filter(_band0(tile), lambda x: x.isNotNull()),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def tile_data_cells(tile: Column) -> Column:
-    """Count of non-NODATA cells in band 0."""
-    return F.size(F.filter(_band0(tile), lambda x: x.isNotNull()))
-
-
-def tile_min(tile: Column) -> Column:
-    return F.array_min(_band0(tile))
-
-
-def tile_max(tile: Column) -> Column:
-    return F.array_max(_band0(tile))
 
 
 def reclassify(

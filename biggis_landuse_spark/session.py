@@ -10,9 +10,13 @@ runtime-adaptive instead of the reference's hard-coded
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -79,6 +83,12 @@ def get_spark(
     return spark
 
 
+# local_df calls that fell back from the Arrow path to the Python-RDD
+# path in this process
+LOCAL_DF_FALLBACKS = 0
+_FALLBACKS_LOCK = threading.Lock()
+
+
 def local_df(spark: SparkSession, rows, schema):
     """Small driver-local rows → DataFrame via the pandas/Arrow
     local-relation path (r10). ``createDataFrame(list)`` plans a
@@ -89,7 +99,10 @@ def local_df(spark: SparkSession, rows, schema):
     relation (codebooks, trained weights, PCA loadings). The pandas
     route converts through Arrow into a JVM-local relation (~0.2 s,
     no python at runtime). Falls back to the plain path for values
-    Arrow refuses — correctness is never traded."""
+    Arrow refuses — correctness is never traded, and the fallback is
+    never silent: it logs a WARNING naming the exception and counts
+    itself in ``LOCAL_DF_FALLBACKS``."""
+    global LOCAL_DF_FALLBACKS
     import pandas as pd
 
     rows = list(rows)
@@ -111,5 +124,13 @@ def local_df(spark: SparkSession, rows, schema):
         if names and set(pdf.columns) == set(names):
             pdf = pdf[names]
         return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
+    except Exception as exc:
+        with _FALLBACKS_LOCK:
+            LOCAL_DF_FALLBACKS += 1
+        log.warning(
+            "local_df: Arrow path failed (%s: %s); falling back to the "
+            "Python-RDD createDataFrame path",
+            type(exc).__name__,
+            exc,
+        )
         return spark.createDataFrame(rows, schema=schema)

@@ -11,7 +11,7 @@ FileSystem API, no table-format dependency):
 - every write lands in a FRESH directory ``v{N}/`` — existing readers
   keep scanning the old files untouched;
 - the write becomes visible via ONE atomic manifest rename
-  (``.tmp`` → ``v{N}.json``); a crashed write leaves only an orphan
+  (``*.tmp`` → ``v{N}.json``); a crashed write leaves only an orphan
   data dir and a ``.tmp`` file, never a half-visible layer;
 - readers resolve latest = max committed manifest, or any historical
   version by number (time travel);
@@ -27,13 +27,17 @@ non-atomic overwrite this replaces.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biggis_landuse_spark.catalog import zorder_key
+from biggis_landuse_spark.catalog import (
+    hadoop_path,
+    read_json,
+    write_json,
+    zorder_key,
+)
 
 
 class VersionedLayerStore:
@@ -53,9 +57,7 @@ class VersionedLayerStore:
         return f"{self._layer_base(layer, zoom)}/_manifests"
 
     def _fs(self, path: str):
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(self.spark._jsc.hadoopConfiguration()), p
+        return hadoop_path(self.spark, path)
 
     # -- commit protocol ---------------------------------------------------
 
@@ -73,36 +75,17 @@ class VersionedLayerStore:
         return sorted(out)
 
     def _read_manifest(self, layer: str, zoom: int, version: int) -> dict:
-        fs, p = self._fs(
-            f"{self._manifest_dir(layer, zoom)}/v{version}.json"
+        return read_json(
+            self.spark, f"{self._manifest_dir(layer, zoom)}/v{version}.json"
         )
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    stream
-                )
-            )
-        finally:
-            stream.close()
-        return json.loads(data.decode("utf-8"))
 
     def _commit(self, layer: str, zoom: int, version: int, manifest: dict) -> None:
-        """Atomically publish a manifest: write ``.tmp``, then rename.
-        HDFS/local rename is atomic; a crash before the rename leaves
-        nothing visible."""
-        mdir = self._manifest_dir(layer, zoom)
-        fs, _ = self._fs(mdir)
-        jvm = self.spark._jvm
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{mdir}/v{version}.json.tmp")
-        final = jvm.org.apache.hadoop.fs.Path(f"{mdir}/v{version}.json")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-        finally:
-            out.close()
-        if not fs.rename(tmp, final):
-            fs.delete(tmp, False)
+        """Atomically publish a manifest (``write_json``: temp file,
+        then rename). The rename fails if the version exists, so of two
+        writers racing for one version exactly one commits; a crash
+        before the rename leaves nothing visible."""
+        path = f"{self._manifest_dir(layer, zoom)}/v{version}.json"
+        if not write_json(self.spark, path, manifest, overwrite=False):
             raise RuntimeError(
                 f"commit conflict: {layer}/{zoom} v{version} already exists"
             )

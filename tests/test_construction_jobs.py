@@ -1,15 +1,21 @@
-"""Query construction without avoidable Spark jobs: the load_tables
-schema memo, and the exact-size broadcasts in the D8 doubling loops."""
+"""Work without avoidable Spark jobs: the load_tables schema memo, the
+exact-size broadcasts in the D8 doubling loops, and the layer catalog's
+JSON attribute store (metadata observed on the write job, reads that
+run no job)."""
 
 from __future__ import annotations
 
+import json
 import re
+import threading
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from biggis_landuse_spark import fixtures as FX
+from biggis_landuse_spark.catalog import LayerCatalog
 from biggis_landuse_spark.queries import REGISTRY, _ensure_loaded, load_tables
 
 _ensure_loaded()
@@ -104,3 +110,138 @@ def test_doubling_joins_broadcast_at_fixture_scale(spark, sf_dir, query):
         spark.conf.set(key, prev)
     assert joins_off and "BroadcastHashJoin" not in joins_off
     assert rows_off == rows
+
+
+# the fixture layer's metadata row, field for field
+META_B4_RED = {
+    "layer": "b4_red", "zoom": 3, "cell_type": "float64", "crs": "EPSG:3857",
+    "n_bands": 1, "tile_cols": 8, "tile_rows": 8, "layout_cols": 4,
+    "layout_rows": 4, "key_col_min": 0, "key_col_max": 3, "key_row_min": 0,
+    "key_row_max": 3, "extent": None,
+}
+
+
+@pytest.fixture(scope="module")
+def red(spark):
+    return FX.fixture_layer(spark, "b4_red")
+
+
+@pytest.fixture(scope="module")
+def written(spark, tmp_path_factory, red):
+    """(catalog, the Spark jobs its one write_layer of b4_red ran)."""
+    cat = LayerCatalog(spark, str(tmp_path_factory.mktemp("catalog")))
+    _, jobs = _jobs_run(spark, lambda: cat.write_layer(red, "b4_red", 3))
+    return cat, jobs
+
+
+def test_write_layer_runs_at_most_six_jobs(written):
+    assert written[1] <= 6
+
+
+def test_catalog_reads_run_no_job(spark, written):
+    cat = written[0]
+    for read, want in [
+        (lambda: cat.read_attribute("b4_red", 3, "histogramData"), str),
+        (lambda: cat.layer_crs("b4_red"), "EPSG:3857"),
+        (lambda: cat.finest_zoom("b4_red"), 3),
+        (lambda: cat.layer_ids(), [("b4_red", 3)]),
+    ]:
+        got, jobs = _jobs_run(spark, read)
+        assert jobs == 0
+        assert isinstance(got, want) if want is str else got == want
+
+
+def test_fixture_layer_histogram_and_metadata(written):
+    cat = written[0]
+    assert cat.read_attribute("b4_red", 3, "histogramData") == (
+        '{"lo": 0.0, "hi": 3363.0, "counts": [[0, 139], [1, 117], [4, 51], '
+        '[5, 139], [6, 66], [9, 66], [10, 139], [11, 51], [14, 117], '
+        '[15, 139]]}'
+    )
+    [meta] = cat.layers().collect()
+    assert meta.asDict() == META_B4_RED
+
+
+def test_concurrent_writes_of_different_layers_are_all_visible(
+    spark, tmp_path, red
+):
+    # two writers and a reader that lists and reads the catalog while
+    # they run: each record is a whole file, so the reader never fails
+    # and never sees a key that is not finally there
+    cat = LayerCatalog(spark, str(tmp_path))
+    nir = FX.fixture_layer(spark, "b5_nir")
+    final = [("b4_red", 3), ("b5_nir", 3)]
+    errors, seen = [], []
+    writing = threading.Event()
+
+    def write(tiles, layer):
+        try:
+            cat.write_layer(tiles, layer, 3)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    def read():
+        try:
+            while writing.is_set():
+                seen.extend(cat.layer_ids())
+                for layer, zoom in final:
+                    cat.read_attribute(layer, zoom, "histogramData")
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    writers = [
+        threading.Thread(target=write, args=a)
+        for a in [(red, "b4_red"), (nir, "b5_nir")]
+    ]
+    reader = threading.Thread(target=read)
+    writing.set()
+    reader.start()
+    for t in writers:
+        t.start()
+    for t in writers:
+        t.join(timeout=300)
+    writing.clear()
+    reader.join(timeout=60)
+    assert not any(t.is_alive() for t in [*writers, reader])
+    assert errors == []
+    assert set(seen) <= set(final)
+    assert sorted(cat.layer_ids()) == final
+    assert sorted(r["layer"] for r in cat.layers().collect()) == [
+        "b4_red", "b5_nir"
+    ]
+    for layer, zoom in final:
+        assert cat.read_attribute(layer, zoom, "histogramData") is not None
+
+
+def test_rewrite_of_a_key_replaces_its_metadata(spark, tmp_path, red):
+    cat = LayerCatalog(spark, str(tmp_path))
+    cat.write_layer(red, "b4_red", 3)
+    corner = red.where("tile_col = 0 AND tile_row = 0")
+    cat.write_layer(corner, "b4_red", 3, crs="EPSG:32632")
+    [meta] = cat.layers().collect()
+    assert (meta["crs"], meta["layout_cols"], meta["key_col_max"]) == (
+        "EPSG:32632", 1, 0
+    )
+    crs, jobs = _jobs_run(spark, lambda: cat.layer_crs("b4_red", 3))
+    assert (crs, jobs) == ("EPSG:32632", 0)
+    # the rename replaced the key's one record and left no temp file
+    records = tmp_path / "layers" / "b4_red"
+    assert [p.name for p in records.iterdir() if p.suffix != ".crc"] == ["3.json"]
+    hist = json.loads(cat.read_attribute("b4_red", 3, "histogramData"))
+    assert sum(c for _, c in hist["counts"]) == FX.TS * FX.TS
+    assert cat.read_layer("b4_red", 3).count() == 1
+
+
+def test_layer_name_with_slash_and_space_round_trips(spark, tmp_path, red):
+    cat = LayerCatalog(spark, str(tmp_path))
+    odd = "scene 7/b4 red"
+    cat.write_layer(red, odd, 3)
+    cat.write_layer(red, "plain", 3)
+    assert sorted(cat.layer_ids()) == [("plain", 3), (odd, 3)]
+    assert cat.read_layer(odd).count() == FX.GRID * FX.GRID
+    cat.delete_layer(odd)
+    assert cat.layer_ids() == [("plain", 3)]
+    assert cat.read_attribute(odd, 3, "histogramData") is None
+    assert cat.read_layer("plain", 3).count() == FX.GRID * FX.GRID
+    left = spark.read.parquet(cat.tiles_path).select("layer").distinct()
+    assert [r["layer"] for r in left.collect()] == ["plain"]

@@ -276,3 +276,19 @@ def test_split_samples_random_mode_contract(spark):
     assert ta | sa == set(range(2000)) and not (ta & sa)
     assert ta == {r["k"] for r in t2.collect()}
     assert 0.5 < len(ta) / 2000 < 0.7
+
+
+def test_classifier_predicts_in_a_session_that_ran_an_observation(spark):
+    # an Observation (catalog.write_layer's metadata, the flow loops'
+    # counts) leaves the session unserializable; a model that kept its
+    # training summary, which holds the session, could then not ship
+    # its predict UDF
+    from pyspark.sql import Observation
+
+    spark.range(3).observe(Observation(), F.count(F.lit(1))).collect()
+    samples = spark.createDataFrame(
+        [(1.0 + (i % 2), [float(i % 2), 1.0 - i % 2]) for i in range(8)],
+        "label double, features array<double>",
+    )
+    model = train_ova(samples, max_iter=5)
+    assert accuracy(predict(model, samples)) == 1.0

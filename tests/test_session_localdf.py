@@ -46,3 +46,27 @@ def test_row_objects_out_of_schema_order(spark):
 def test_positional_tuples_still_work(spark):
     [r] = local_df(spark, [("l", "a", 1, 2)], SCHEMA).collect()
     assert (r["layer"], r["attr"], r["zoom"], r["rank"]) == ("l", "a", 1, 2)
+
+
+def test_arrow_fallback_is_logged_and_counted(spark, monkeypatch, caplog):
+    import pandas as pd
+
+    from biggis_landuse_spark import session
+
+    real = spark.createDataFrame
+
+    def arrow_refuses(data, *args, **kwargs):
+        if isinstance(data, pd.DataFrame):
+            raise TypeError("arrow refused this frame")
+        return real(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", arrow_refuses)
+    before = session.LOCAL_DF_FALLBACKS
+    rows = [{"layer": "ndvi", "attr": "histogram", "zoom": 3, "rank": 7}]
+    with caplog.at_level("WARNING", logger="biggis_landuse_spark.session"):
+        got = [tuple(r) for r in local_df(spark, rows, SCHEMA).collect()]
+    assert got == [("ndvi", "histogram", 3, 7)]
+    assert session.LOCAL_DF_FALLBACKS == before + 1
+    [warning] = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert "TypeError" in warning.getMessage()
+    assert "arrow refused this frame" in warning.getMessage()
