@@ -13,11 +13,15 @@ name on both sides.
 
 from __future__ import annotations
 
+import logging
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -172,6 +176,9 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
 # across a 139-query harness session they must not accumulate, so
 # harnesses call release_caches() between queries.
 _ACTIVE_CACHES: list[DataFrame] = []
+# unpersist calls in release_caches() that raised in this process
+UNPERSIST_FAILURES = 0
+_FAILURES_LOCK = threading.Lock()
 
 
 def hold_cache(df: DataFrame) -> DataFrame:
@@ -185,13 +192,23 @@ def hold_cache(df: DataFrame) -> DataFrame:
 def release_caches() -> None:
     """Drop every hold_cache()d relation. Safe to call repeatedly;
     called by bench.py after each query's timed runs and by the local
-    oracle gate after each comparison."""
+    oracle gate after each comparison. An ``unpersist`` that raises
+    (e.g. the session already stopped) does not stop the release of
+    the rest; it logs a WARNING naming the exception and counts itself
+    in ``UNPERSIST_FAILURES``."""
+    global UNPERSIST_FAILURES
     while _ACTIVE_CACHES:
         df = _ACTIVE_CACHES.pop()
         try:
             df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
+        except Exception as exc:
+            with _FAILURES_LOCK:
+                UNPERSIST_FAILURES += 1
+            log.warning(
+                "release_caches: unpersist failed (%s: %s)",
+                type(exc).__name__,
+                exc,
+            )
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -23,7 +23,9 @@ read (HadoopValueReader, ServeLayerAsMap.scala:33,111), renders with a
 
 from __future__ import annotations
 
+import logging
 import struct
+import threading
 import zlib
 from typing import Iterator, Sequence
 
@@ -37,6 +39,25 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+log = logging.getLogger(__name__)
+
+# tile-server requests answered 500 in this process
+SERVER_ERRORS = 0
+_ERRORS_LOCK = threading.Lock()
+
+
+def _server_error(path: str, exc: Exception) -> None:
+    """Log (with the traceback) and count a request the tile server
+    answers with 500."""
+    global SERVER_ERRORS
+    with _ERRORS_LOCK:
+        SERVER_ERRORS += 1
+    log.error(
+        "tile server: GET %s failed (%s: %s)",
+        path, type(exc).__name__, exc, exc_info=exc,
+    )
+
 
 # default 10-class color ramp (hex RGBA), analog of the reference's
 # ColorRamps usage in ServeLayerAsMap.scala:88-94
@@ -416,6 +437,7 @@ class TileServer:
                     try:
                         body = json.dumps(server.meta()).encode()
                     except Exception as exc:  # noqa: BLE001
+                        _server_error(self.path, exc)
                         self.send_error(500, str(exc)[:100])
                         return
                     self._send(body, "application/json")
@@ -427,6 +449,7 @@ class TileServer:
                 try:
                     png = server.lookup(*(int(g) for g in m.groups()))
                 except Exception as exc:  # noqa: BLE001 — surface as 500
+                    _server_error(self.path, exc)
                     self.send_error(500, str(exc)[:100])
                     return
                 if png is None:

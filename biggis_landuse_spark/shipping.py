@@ -14,16 +14,29 @@ Every operator that uses a pandas UDF calls this first.
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
 
+log = logging.getLogger(__name__)
+
 _SHIPPED: set[int] = set()
+# addPyFile calls that raised in this process
+ADD_PYFILE_FAILURES = 0
+_FAILURES_LOCK = threading.Lock()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
+    """Zip the package and ``addPyFile`` it once per SparkContext. A
+    failing ``addPyFile`` (e.g. the name is already registered in this
+    context) is not fatal — workers that already have the package keep
+    working — but it is never silent: it logs a WARNING naming the
+    exception and counts itself in ``ADD_PYFILE_FAILURES``."""
+    global ADD_PYFILE_FAILURES
     sc = spark.sparkContext
     key = id(sc)
     if key in _SHIPPED:
@@ -41,6 +54,13 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                     z.write(full, rel)
     try:
         sc.addPyFile(zpath)
-    except Exception:
-        pass  # already registered under this name in this context
+    except Exception as exc:
+        with _FAILURES_LOCK:
+            ADD_PYFILE_FAILURES += 1
+        log.warning(
+            "ensure_package_shipped: addPyFile(%s) failed (%s: %s)",
+            zpath,
+            type(exc).__name__,
+            exc,
+        )
     _SHIPPED.add(key)

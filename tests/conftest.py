@@ -9,49 +9,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Test tiers (r12, VERDICT r11 #2): the full suite grew to 980 tests /
-# 25-37 minutes, which outran the driver's pytest budget (VERIFY_r11
-# captured ~80% of the dots and recorded tests_ok: false with zero
-# failures visible). The DEFAULT tier must finish well inside the
-# budget, so the heavyweight e2e/codec/harness files and the bulk of
-# the oracle-differential parametrization are skipped unless
-# SPARK_GRAFT_SLOW_TESTS=1 (the builder's full-gate runs set it; the
-# driver does not). Coverage note: everything the slow tier defers is
-# ALSO verified by stronger gates the round runs anyway — the driver's
-# own oracle comparator re-runs every query against DuckDB, and the
-# builder's /tmp full sweeps replay the identical comparison — so the
-# default tier keeps the unit/kernel/regression tests and a
-# cross-family oracle smoke set, not redundant end-to-end weight.
+# Test tiers: the full suite runs 25-37 minutes, so the DEFAULT tier —
+# the tier-1 verify command in ROADMAP.md, run without any tier
+# variable — skips the heavyweight e2e/codec/harness modules and the
+# bulk of the oracle-differential parametrization. A slow module says
+# so itself with ``pytestmark = pytest.mark.slow`` (the ``slow`` marker
+# is registered in pyproject.toml), so renaming or adding a file keeps
+# its tier. ``pytest.mark.slow(spark_only=True)`` marks only the
+# module's tests that use the ``spark`` fixture (test_reproject.py's
+# parse tests stay in the default tier). The full gate — the whole
+# suite run before a change is merged — sets SPARK_GRAFT_SLOW_TESTS=1
+# and runs every tier. Coverage note: everything the slow tier defers
+# is ALSO verified by the DuckDB oracle sweep, which re-runs every
+# registry query against its oracle.
 RUN_SLOW_TESTS = os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1"
-
-SLOW_TEST_FILES = {
-    "test_streaming.py",          # stream-stream joins: minutes of wall
-    "test_cli.py",                # whole-CLI subprocess e2e
-    "test_plans.py",              # builds all 237 physical plans
-    "test_ml_codecs.py",          # train/predict/persist e2e
-    "test_stack_align.py",        # multi-layer ingest e2e
-    "test_ansi_robustness.py",    # degenerate-input full-query sweeps
-    "test_pyramid_update.py",     # full-rebuild comparison
-    "test_reproject.py",          # parallel band ingest e2e
-    "test_workflow_e2e.py",       # end-to-end workflow
-    "test_streaming_quality.py",  # stream/batch twin parity
-    "test_compaction.py",         # file-layout rewrites
-    "test_tiff_codec.py",         # multi-IFD pyramid scans
-    "test_avi_codec.py",          # video container round-trips
-    "test_index_store.py",        # persisted-index retrain parity
-    "test_flow.py",               # iterative flow fixpoints (54 s)
-    "test_serving.py",            # serving-layer e2e
-    "test_ivf_trained.py",        # trained-codebook parity sweeps
-    "test_regions.py",            # region graph e2e
-    "test_raster_core.py",        # catalog write/read/merge e2e
-    "test_getting_started_e2e.py",
-    "test_spool_source.py",       # streaming source integration
-    "test_webdataset.py",         # multimodal payload round-trips
-    "test_kafka_wrappers.py",
-    "test_degenerate_corpus.py",  # 3-row-corpus query sweep
-    "test_streaming_bloom.py",
-    "test_versioning.py",
-}
 
 # cross-family oracle smoke subset kept in the default tier (the full
 # 237-query parametrization runs in the slow tier / the /tmp sweeps)
@@ -65,29 +36,23 @@ ORACLE_SMOKE = {
 }
 
 
-def missing_slow_test_files() -> list[str]:
-    """SLOW_TEST_FILES entries that name no file in tests/: a renamed
-    slow file would otherwise drop back into the default tier, and the
-    stale entry would match nothing."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    return sorted(
-        f for f in SLOW_TEST_FILES if not os.path.isfile(os.path.join(here, f))
-    )
+def is_slow(item) -> bool:
+    mark = item.get_closest_marker("slow")
+    if mark is None:
+        return False
+    return not mark.kwargs.get("spark_only") or "spark" in item.fixturenames
 
 
 def pytest_collection_modifyitems(config, items):
-    missing = missing_slow_test_files()
-    assert not missing, f"SLOW_TEST_FILES names missing test files: {missing}"
     if RUN_SLOW_TESTS:
         return
     skip_slow = pytest.mark.skip(
         reason="slow tier (set SPARK_GRAFT_SLOW_TESTS=1 to run)"
     )
     for item in items:
-        fname = os.path.basename(str(getattr(item, "fspath", item.nodeid)))
-        if fname in SLOW_TEST_FILES:
+        if is_slow(item):
             item.add_marker(skip_slow)
-        elif fname == "test_oracle.py" and "[" in item.name:
+        elif item.path.name == "test_oracle.py" and "[" in item.name:
             q = item.name.split("[", 1)[1].rstrip("]")
             if q not in ORACLE_SMOKE:
                 item.add_marker(skip_slow)

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from biggis_landuse_spark.functions.similarity import as_double, cosine
 from biggis_landuse_spark.model import TILE_SCHEMA
 
+pytestmark = pytest.mark.slow
+
 
 def test_cosine_of_zero_vector_is_null_not_crash(spark):
     df = spark.createDataFrame(

@@ -15,6 +15,8 @@ from biggis_landuse_spark.sources.avi import (
     encode_avi_mjpg,
 )
 
+pytestmark = pytest.mark.slow
+
 
 def _frames(h, w, n=3, seed=7):
     rng = np.random.RandomState(seed)

@@ -12,6 +12,8 @@ import pytest
 from biggis_landuse_spark.__main__ import main
 from biggis_landuse_spark.sources.tiff import decode_tiff, encode_tiff
 
+pytestmark = pytest.mark.slow
+
 W = H = 32
 TILE = 16
 

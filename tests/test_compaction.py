@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from biggis_landuse_spark.catalog import LayerCatalog, zorder_key
 from biggis_landuse_spark.fixtures import fixture_layer
 
+pytestmark = pytest.mark.slow
+
 
 def _files(base: str, layer: str, zoom: int) -> list[str]:
     return glob.glob(

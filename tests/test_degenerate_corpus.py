@@ -19,6 +19,8 @@ import pytest
 
 from tests.conftest import SF_DIR
 
+pytestmark = pytest.mark.slow
+
 TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"

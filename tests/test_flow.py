@@ -16,6 +16,8 @@ from biggis_landuse_spark.operators.flow import (
 )
 from biggis_landuse_spark.queries import REGISTRY, _ensure_loaded
 
+pytestmark = pytest.mark.slow
+
 SF = "/root/testdata/sf0.001"
 
 

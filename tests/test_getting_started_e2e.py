@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
+import pytest
 
 from biggis_landuse_spark.catalog import LayerCatalog
 from biggis_landuse_spark.operators.local import mask_bits, ndvi
@@ -17,6 +18,8 @@ from biggis_landuse_spark.pixeling import tiles_to_pixels
 from biggis_landuse_spark.serving import lookup_tile, render_tiles_png
 from biggis_landuse_spark.sources.geotiff import ingest_geotiff
 from biggis_landuse_spark.sources.tiff import encode_tiff
+
+pytestmark = pytest.mark.slow
 
 W = H = 32
 TILE = 16

@@ -17,6 +17,8 @@ from biggis_landuse_spark.ml.index_store import (
 )
 from biggis_landuse_spark.queries import REGISTRY, _ensure_loaded, load_tables
 
+pytestmark = pytest.mark.slow
+
 SF = "/root/testdata/sf0.001"
 
 

@@ -14,6 +14,8 @@ from biggis_landuse_spark.functions.similarity import (
 from biggis_landuse_spark.ml.ivf import train_codebook
 from biggis_landuse_spark.queries import load_tables
 
+pytestmark = pytest.mark.slow
+
 K = 5
 N_QUERIES = 20
 

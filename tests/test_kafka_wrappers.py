@@ -30,6 +30,8 @@ from biggis_landuse_spark.sources.kafka import (
     write_samples_kafka,
 )
 
+pytestmark = pytest.mark.slow
+
 KAFKA_WIRE_SCHEMA = (
     "key binary, value binary, topic string, partition int, offset bigint"
 )

@@ -35,7 +35,7 @@ from biggis_landuse_spark.sources.geotiff import (
     ingest_geotiff,
 )
 
-pytestmark = pytest.mark.usefixtures("spark")
+pytestmark = [pytest.mark.slow, pytest.mark.usefixtures("spark")]
 
 
 @pytest.fixture(scope="module")

@@ -11,6 +11,8 @@ import pytest
 
 from biggis_landuse_spark.queries import REGISTRY, _ensure_loaded
 
+pytestmark = pytest.mark.slow
+
 SF = "/root/testdata/sf0.001"
 
 

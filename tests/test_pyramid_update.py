@@ -12,6 +12,8 @@ from biggis_landuse_spark.catalog import LayerCatalog
 from biggis_landuse_spark.operators.local import map_pixels
 from biggis_landuse_spark.operators.pyramid import build_pyramid, update_pyramid
 
+pytestmark = pytest.mark.slow
+
 
 def _levels(cat, layer, zooms):
     out = {}

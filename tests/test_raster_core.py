@@ -17,6 +17,8 @@ from biggis_landuse_spark.pixeling import (
     tiles_to_pixels,
 )
 
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture(scope="module")
 def red(spark):

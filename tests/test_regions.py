@@ -7,8 +7,11 @@ import random
 from collections import deque
 
 from pyspark.sql import functions as F
+import pytest
 
 from biggis_landuse_spark.operators.regions import label_regions
+
+pytestmark = pytest.mark.slow
 
 
 def _bfs_regions(cells: dict[tuple[int, int], int], width: int) -> dict:

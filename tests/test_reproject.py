@@ -18,6 +18,8 @@ from biggis_landuse_spark.operators.reproject import (
     zoom_for_resolution,
 )
 
+pytestmark = pytest.mark.slow(spark_only=True)
+
 PIX_DDL = (
     "band int, px int, py int, value double, "
     "x0 double, y0 double, dx double, dy double"

@@ -14,6 +14,8 @@ from biggis_landuse_spark import serving as SV
 from biggis_landuse_spark.catalog import LayerCatalog
 from biggis_landuse_spark.fixtures import fixture_layer
 
+pytestmark = pytest.mark.slow
+
 BREAKS = [0.2, 0.5]
 TILE_BREAKS = [1000.0, 2500.0]
 PALETTE = (0x111111FF, 0x222222FF, 0x333333FF)

@@ -10,6 +10,8 @@ from biggis_landuse_spark.sources.spool import (
     append_messages,
 )
 
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture()
 def spool_dir(tmp_path):

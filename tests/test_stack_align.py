@@ -17,6 +17,8 @@ from biggis_landuse_spark.operators.stack import (
     stack_layers,
 )
 
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture()
 def cat(spark, tmp_path):

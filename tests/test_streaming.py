@@ -7,6 +7,10 @@ from __future__ import annotations
 import time
 from datetime import datetime
 
+import pytest
+
+pytestmark = pytest.mark.slow
+
 
 def _ts(s: str) -> datetime:
     return datetime.fromisoformat(s)

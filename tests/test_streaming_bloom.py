@@ -3,10 +3,13 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+import pytest
 
 from biggis_landuse_spark.functions.dedup import bloom_bits
 from biggis_landuse_spark.queries import load_tables
 from biggis_landuse_spark.streaming.dedup import stream_bloom_admit
+
+pytestmark = pytest.mark.slow
 
 DOC_DDL = "doc_id long, text string"
 

@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+import pytest
 
 from biggis_landuse_spark.queries import load_tables
 from biggis_landuse_spark.streaming.quality import (
     quality_flags,
     stream_quality_admit,
 )
+
+pytestmark = pytest.mark.slow
 
 DOC_DDL = "doc_id long, text string"
 

@@ -18,6 +18,8 @@ from biggis_landuse_spark.sources.tiff import (
     georef_of,
 )
 
+pytestmark = pytest.mark.slow
+
 
 def _ramp(h, w, dtype, bands=1, seed=0):
     rng = np.random.default_rng(seed)

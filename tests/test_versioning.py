@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from biggis_landuse_spark.model import TILE_SCHEMA
 from biggis_landuse_spark.versioning import VersionedLayerStore
 
+pytestmark = pytest.mark.slow
+
 
 def _tiles(spark, bump: float):
     rows = [

@@ -16,6 +16,8 @@ from biggis_landuse_spark.sources.webdataset import (
     write_webdataset,
 )
 
+pytestmark = pytest.mark.slow
+
 
 def _docs(spark, n=20):
     return spark.createDataFrame(

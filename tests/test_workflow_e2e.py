@@ -11,6 +11,7 @@ plans (WorkflowExample.scala:153-162); here the whole chain runs.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+import pytest
 
 from biggis_landuse_spark.catalog import LayerCatalog
 from biggis_landuse_spark.ml import classify as C
@@ -24,6 +25,8 @@ from biggis_landuse_spark.pixeling import (
 from biggis_landuse_spark.operators.local import map_pixels
 from biggis_landuse_spark.serving import lookup_tile, render_tiles_png
 from biggis_landuse_spark.sources.geotiff import FakeRampDecoder, ingest_geotiff
+
+pytestmark = pytest.mark.slow
 
 W = H = 16
 TILE = 8
