@@ -1726,12 +1726,12 @@ def _wkt_datum(wkt: str, a: float, rf: float):
     return DATUM_UNKNOWN
 
 
-def _with_datum(kind: str, params, datum: Callable, ellps: tuple):
+def _with_datum(kind: str, params, datum: Callable, ellps: Callable):
     """Attach the datum shift ``datum()`` resolves to a parsed
-    family. ``ellps`` is the source (a, 1/f) for the two descriptors
-    that carry none: a shifted (or datum-unknown) UTM — e.g. ED50
-    "+proj=utm +ellps=intl" — rides the generic TM family so the
-    shift (or the refusal) travels with the params, and a shifted
+    family. ``ellps()`` resolves the source (a, 1/f) for the two
+    descriptors that carry none: a shifted (or datum-unknown) UTM —
+    e.g. ED50 "+proj=utm +ellps=intl" — rides the generic TM family so
+    the shift (or the refusal) travels with the params, and a shifted
     lon/lat becomes GeogParams. Spherical abstractions (moll, sinu)
     are datum-less and never resolve one."""
     if _BY_KIND[kind].datumless:
@@ -1742,11 +1742,11 @@ def _with_datum(kind: str, params, datum: Callable, ellps: tuple):
     if kind == "utm":
         zone, north = params
         return "tm", TmParams(
-            *ellps, 0.0, utm_zone_lon0_deg(zone), _K0, _FALSE_EASTING,
+            *ellps(), 0.0, utm_zone_lon0_deg(zone), _K0, _FALSE_EASTING,
             0.0 if north else _FALSE_NORTHING_S, hel,
         )
     if kind == "lonlat":
-        return "lonlat", GeogParams(*ellps, hel)
+        return "lonlat", GeogParams(*ellps(), hel)
     return kind, dataclasses.replace(params, helmert=hel)
 
 
@@ -2128,16 +2128,16 @@ _BY_WKT = {name: f for f in _FAMILIES for name in f.wkt}
 _BY_CODE = {code: (f, p) for f in _FAMILIES for code, p in f.epsg.items()}
 
 
-def _build(kv: dict, src: str, missing: Callable[[str], str]):
+def _build(a: _Args):
     """(kind, params) of a definition in the proj4 vocabulary."""
-    proj = kv["proj"]
+    proj = a.kv["proj"]
     fam = _BY_PROJ4.get(proj)
     if fam is None:
         raise ValueError(
             f"unsupported +proj={proj}: {', '.join(_BY_PROJ4)} are "
-            f"supported — {src!r}"
+            f"supported — {a.src!r}"
         )
-    params = fam.build(_Args(kv, src, missing))
+    params = fam.build(a)
     return _KIND_OF[type(params)], params
 
 
@@ -2177,13 +2177,15 @@ def parse_proj4(proj4: str) -> tuple[str, object]:
         raise ValueError(
             f"projected unit unsupported — metres only: {proj4!r}"
         )
-    kind, params = _build(
+    args = _Args(
         kv, proj4, lambda key: f"proj4 {proj!r} needs +{key}: {proj4!r}"
     )
-    name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
+    kind, params = _build(args)
+    if "ellps" in kv:
+        # an unknown +ellps name is refused even where no step reads it
+        args.ellipsoid()
     return _with_datum(
-        kind, params, lambda: _proj4_datum(kv, proj4),
-        _ELLPS.get(name, _ELLPS["WGS84"]),
+        kind, params, lambda: _proj4_datum(kv, proj4), args.ellipsoid
     )
 
 
@@ -2212,7 +2214,9 @@ def parse_wkt_crs(wkt: str) -> tuple[str, object]:
         if sph
         else _ELLPS["WGS84"]
     )
-    return _with_datum(kind, params, lambda: _wkt_datum(wkt, *ell), ell)
+    return _with_datum(
+        kind, params, lambda: _wkt_datum(wkt, *ell), lambda: ell
+    )
 
 
 def _parse_wkt_family(wkt: str) -> tuple[str, object]:
@@ -2259,11 +2263,11 @@ def _parse_wkt_family(wkt: str) -> tuple[str, object]:
         kv[key] = next((params[n] for n in names if n in params), None)
     if fam.wkt_fix is not None:
         fam.wkt_fix(kv, params, proj, wkt)
-    return _build(
+    return _build(_Args(
         kv, wkt[:60],
         lambda key: f"WKT {proj!r} missing PARAMETER "
                     f"{_WKT_PARAMS.get(key, (key,))[0]!r}",
-    )
+    ))
 
 
 def parse_crs(crs: str) -> tuple[str, object]:
@@ -2375,7 +2379,9 @@ def reproject_pixels_to_webmercator(
             "element / a known +datum= name) to the CRS definition."
         )
     lon, lat = _BY_KIND[kind].inverse(sx, sy, crs_info)
-    if kind != "lonlat":
+    # a geographic CRS needs no inverse, but a shifted one still takes
+    # its Helmert step below
+    if kind != "lonlat" or hel is not None:
         # Plan discipline for the big trig trees (r8, found by the
         # scene-scale e2e): the family-inverse lon/lat expressions
         # reuse Column subtrees heavily (phi1 → d → d² → d⁶ …), so

@@ -4835,43 +4835,38 @@ def flow_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN acc a ON a.v = CAST(c.gy * {_FLOW_W} + c.gx AS BIGINT)
     GROUP BY 1
     """,
-    doc="""FULL-horizon D8 flow accumulation (the standard hydrology
-    product: upstream-contributor counts over the WHOLE flow path, no
-    depth bound), rolled up to the same accumulation histogram as the
-    bounded query. Euler tour + weighted list ranking (r10, VERDICT
-    r9 #1): acc(v) = subtree size − 1 in the in-forest, read off the
-    tour ranks of each node's enter/leave arcs. The ranking is
-    pointer doubling that SUMS carried distances — O(n) state (2n arc
-    rows) in every round, ceil(log2 tour-length) rounds, one hash
-    equi-join each — replacing the r9 transitive closure whose
-    (source, downstream) pairs totalled O(n·L) rows for horizon L
-    (3-4 orders of magnitude over the n-sized answer on continental
-    grids; equality with the closure form is pinned in
-    tests/test_flow.py). The loop drains (every arc reaches its tour
-    end) rather than trusting a preset horizon; per-round
-    localCheckpoint keeps task binaries flat. Oracle:
-    walk-to-fixpoint recursive CTE (no depth cap). Operator:
-    operators/flow.py flow_accumulation_full.""",
+    doc="""FULL-horizon D8 flow accumulation, block-local (Barnes
+    2017): a numpy drain per 512² block, then only the block-perimeter
+    exit cells solved globally. The standard hydrology product:
+    upstream-contributor counts over the WHOLE flow path, no depth
+    bound, rolled up to the same accumulation histogram as the bounded
+    query. Barnes 2017 ("Parallel non-divergent flow accumulation for
+    trillion cell DEMs"): one exchange sends each cell to its block
+    plus a one-cell halo, and one applyInPandas per block takes the D8
+    directions and drains the block in numpy (Kahn
+    levels for the in-block accumulation, pointer jumping for each
+    cell's in-block terminal: a pit or the exit cell where its path
+    leaves the block). Only the exit cells, about 4/512 of the grid,
+    are solved globally: the perimeter forest links each exit to the
+    terminal of its downstream cell, a weighted Euler tour sums the
+    cells each exit carries into its entry cell's inflow, and a second
+    block pass adds that inflow. The fixture grid is one block, so the
+    query builds with one eager action and no perimeter rounds; equality
+    with the whole-grid Euler tour at small blocks is pinned in
+    tests/test_flow_blocks.py. Oracle: walk-to-fixpoint recursive CTE
+    (no depth cap). Operator: operators/flow.py
+    block_flow_accumulation.""",
     tags=("W1", "SPATIAL", "GRAPH"),
     bench=True,
 )
 def flow_accumulation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from biggis_landuse_spark.operators.flow import (
-        d8_directions,
-        flow_accumulation_full as _facc_full,
-        flow_edges,
+        block_flow_accumulation,
     )
 
     cells = _flow_cells(spark, sf_dir)
-    directed = d8_directions(cells)
-    edges = flow_edges(directed, _FLOW_W)
-    acc = _facc_full(edges).localCheckpoint(eager=True)
-    ids = cells.select(
-        (F.col("gy") * _FLOW_W + F.col("gx")).cast("long").alias("v")
-    )
     return (
-        ids.join(acc, "v", "left")
-        .select(F.coalesce("acc", F.lit(0)).cast("long").alias("acc"))
+        block_flow_accumulation(cells, _FLOW_W)
         .groupBy("acc")
         .agg(F.count(F.lit(1)).alias("n_cells"))
     )
@@ -4906,35 +4901,35 @@ def flow_accumulation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT root, CAST(count(*) AS BIGINT) AS n_cells
     FROM roots GROUP BY 1
     """,
-    doc="""Watershed (drainage-basin) delineation over the D8 flow
-    graph: every cell labels itself with the terminal pit it drains
-    to, rolled up to per-basin cell counts. The labeling is pointer
-    DOUBLING — pits self-loop and each round composes the parent map
-    with itself, so FULL basins resolve in O(log diameter) rounds (8
-    here covers path length 256) where flow_accumulation's bounded
-    chase pays one round per step; per-round localCheckpoint keeps
-    lineage flat (the connected_components discipline on a functional
-    graph). Every round is one hash equi-join on the cell id; the
-    strictly-downhill DAG guarantees convergence to a unique root.
-    Oracle: walk-to-fixpoint recursive CTE filtered to pit endpoints.
-    Operator: operators/flow.py watershed_roots.""",
+    doc="""Watershed (drainage-basin) delineation, block-local
+    (Barnes 2017): a numpy drain per 512² block, then pointer doubling
+    over the block-perimeter exit cells only. Every cell of the D8
+    flow graph labels itself with the terminal pit it drains to,
+    rolled up to per-basin cell counts. One applyInPandas per block
+    (its cells plus a one-cell halo) takes the D8 directions and gives
+    each cell its in-block terminal by numpy pointer jumping — a pit,
+    which is the
+    root, or the exit cell where its path leaves the block. Only the
+    exit cells are labeled globally: pointer DOUBLING over the
+    perimeter forest (each exit links to the terminal of its
+    downstream cell; pits self-loop) in as many rounds as cover the
+    longest possible forest path, then one join gives every cell the
+    root of its terminal. The fixture grid is one block, so the query
+    builds with one eager action and no doubling rounds; equality with
+    whole-grid doubling at small blocks is pinned in
+    tests/test_flow_blocks.py. Oracle: walk-to-fixpoint recursive CTE
+    filtered to pit endpoints. Operator: operators/flow.py
+    block_watershed_roots.""",
     tags=("W1", "SPATIAL", "GRAPH"),
     bench=True,
 )
 def watershed_basins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from biggis_landuse_spark.operators.flow import (
-        d8_directions,
-        flow_edges,
-        watershed_roots,
+        block_watershed_roots,
     )
 
     cells = _flow_cells(spark, sf_dir)
-    directed = d8_directions(cells)
-    edges = flow_edges(directed, _FLOW_W)
-    ids = cells.select(
-        (F.col("gy") * _FLOW_W + F.col("gx")).cast("long").alias("u")
-    )
-    roots = watershed_roots(edges, ids, rounds=8)
+    roots = block_watershed_roots(cells, _FLOW_W)
     return roots.groupBy("root").agg(F.count(F.lit(1)).alias("n_cells"))
 
 
@@ -4987,9 +4982,12 @@ def _strahler_oracle() -> str:
     (GRASS r.stream.order / the hydrology-textbook stream
     classification): headwater cells are order 1 and a confluence of
     two or more equal-order tributaries increments, rolled up to a
-    per-order cell census. Monotone fixpoint iteration
-    ({_STRAHLER_ROUNDS} rounds — tests pin convergence by comparing
-    +2 rounds): each round is ONE hash equi-join of the order vector
+    per-order cell census. Monotone fixpoint iteration over every
+    cell ({_STRAHLER_ROUNDS} rounds — tests pin convergence by
+    comparing +2 rounds; unlike accumulation and basins it stays off
+    the block kernels, because its update along a path is a max /
+    count-at-max fold, not a sum, so it does not reduce to a weighted
+    perimeter forest): each round is ONE hash equi-join of the order vector
     against the edge list plus a fan-in-bounded aggregate (<= 8
     tributaries per cell on a D8 graph, so the collected list is
     constant-size), per-round localCheckpoint keeps lineage flat.

@@ -1,5 +1,6 @@
 """Work without avoidable Spark jobs: the load_tables schema memo, the
-exact-size broadcasts in the D8 doubling loops, and the layer catalog's
+one-job D8 block queries and the exact-size broadcasts in their
+perimeter rounds, and the layer catalog's
 JSON attribute store (metadata observed on the write job, reads that
 run no job)."""
 
@@ -16,7 +17,12 @@ import pytest
 
 from biggis_landuse_spark import fixtures as FX
 from biggis_landuse_spark.catalog import LayerCatalog
+from biggis_landuse_spark.operators.flow import (
+    block_flow_accumulation,
+    block_watershed_roots,
+)
 from biggis_landuse_spark.queries import REGISTRY, _ensure_loaded, load_tables
+from biggis_landuse_spark.queries.raster_shapes import _FLOW_W, _flow_cells
 
 _ensure_loaded()
 
@@ -69,15 +75,23 @@ def test_rewritten_file_is_inferred_again(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(2, "x")]
 
 
-# the pointer-doubling joins: Euler-tour ranking joins on ptr, watershed
-# labeling on v (every other join in either query keys on other columns)
-_DOUBLING_KEY = {"flow_accumulation_full": "ptr", "watershed_basins": "v"}
+# the pointer-doubling joins of the block kernels' perimeter solve:
+# the weighted Euler tour joins on ptr, the basin labeling on v (every
+# other join in either operator keys on other columns)
+_DOUBLING = {
+    "flow_accumulation_full": (block_flow_accumulation, "ptr"),
+    "watershed_basins": (block_watershed_roots, "v"),
+}
 
 
 def _doubling_join_strategies(spark, query, sf_dir):
-    """(result rows, the join operators the query's doubling rounds
-    planned), read off every localCheckpointed plan after it ran —
-    initial and final AQE plans both."""
+    """(result rows, the join operators the perimeter rounds planned)
+    for the query's block operator over the fixture grid, at a block
+    small enough that the grid has a perimeter to solve: read off every
+    localCheckpointed plan after it ran — initial and final AQE plans
+    both."""
+    op, key = _DOUBLING[query]
+    cells = _flow_cells(spark, sf_dir)
     cls = type(spark.range(1))
     orig = cls.localCheckpoint
     plans = []
@@ -89,14 +103,14 @@ def _doubling_join_strategies(spark, query, sf_dir):
 
     cls.localCheckpoint = spy
     try:
-        rows = sorted(tuple(r) for r in REGISTRY[query].spark(spark, sf_dir).collect())
+        rows = sorted(tuple(r) for r in op(cells, _FLOW_W, block=8).collect())
     finally:
         cls.localCheckpoint = orig
-    pat = re.compile(rf"(\w+Join) \[{_DOUBLING_KEY[query]}#\d+L\]")
+    pat = re.compile(rf"(\w+Join) \[{key}#\d+L\]")
     return rows, {m for p in plans for m in pat.findall(p)}
 
 
-@pytest.mark.parametrize("query", sorted(_DOUBLING_KEY))
+@pytest.mark.parametrize("query", sorted(_DOUBLING))
 def test_doubling_joins_broadcast_at_fixture_scale(spark, sf_dir, query):
     rows, joins = _doubling_join_strategies(spark, query, sf_dir)
     assert joins == {"BroadcastHashJoin"}
@@ -110,6 +124,16 @@ def test_doubling_joins_broadcast_at_fixture_scale(spark, sf_dir, query):
         spark.conf.set(key, prev)
     assert joins_off and "BroadcastHashJoin" not in joins_off
     assert rows_off == rows
+
+
+@pytest.mark.parametrize("query", sorted(_DOUBLING))
+def test_block_queries_build_with_at_most_two_jobs(spark, sf_dir, query):
+    # the fixture grid is one block: the block pass's checkpoint is the
+    # one eager action (its one exchange is a map-stage job of its own
+    # under AQE), and no perimeter round runs
+    load_tables(spark, sf_dir, "part")  # the schema memo's first read
+    _, jobs = _jobs_run(spark, lambda: REGISTRY[query].spark(spark, sf_dir))
+    assert jobs <= 2
 
 
 # the fixture layer's metadata row, field for field

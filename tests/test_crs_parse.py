@@ -1,8 +1,10 @@
-"""CRS family registry (operators/reproject.py ``_FAMILIES``), Spark-free:
-every EPSG code resolves to its entry, a proj4 and a WKT spelling of
-each family build the same params as the EPSG entry (one builder per
-family, datum shift included), every returned kind has an inverse in
-the warp dispatch, and non-metre proj4 units are refused."""
+"""CRS family registry (operators/reproject.py ``_FAMILIES``): every
+EPSG code resolves to its entry, a proj4 and a WKT spelling of each
+family build the same params as the EPSG entry (one builder per
+family, datum shift included, on the ellipsoid the definition
+declares), every returned kind has an inverse in the warp dispatch,
+and non-metre proj4 units are refused — all Spark-free — plus one warp
+check: a shifted geographic CRS is keyed through its datum shift."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import pytest
 
 from biggis_landuse_spark.operators.reproject import (
     _BY_KIND,
+    _ELLPS,
     _CASSINI_CRS,
     _FAMILIES,
     _KROVAK_CRS,
@@ -24,9 +27,12 @@ from biggis_landuse_spark.operators.reproject import (
     DATUM_UNKNOWN,
     MODIS_SINU,
     SinuEllParams,
+    TmParams,
+    datum_shift_to_wgs84,
     parse_crs,
     parse_proj4,
     parse_wkt_crs,
+    reproject_pixels_to_webmercator,
 )
 
 WGS84 = ("WGS 84", 6378137, 298.257223563)
@@ -253,3 +259,81 @@ def test_proj4_non_metre_units_are_refused(proj4):
         "+to_meter=0.3048006096012192", "+to_meter=1"
     )
     assert parse_proj4(metric)[0] in ("tm", "lcc")
+
+
+SHIFT = "+towgs84=598.1,73.7,418.2"
+
+
+def test_proj4_shifted_utm_keeps_its_numeric_ellipsoid():
+    # the TM a shifted UTM becomes is on the ellipsoid the definition
+    # declares, by name or by +a/+rf alike
+    by_name = parse_proj4(f"+proj=utm +zone=32 +ellps=bessel {SHIFT}")
+    numeric = parse_proj4(
+        f"+proj=utm +zone=32 +a=6377397.155 +rf=299.1528128 {SHIFT}"
+    )
+    assert by_name[0] == numeric[0] == "tm"
+    assert isinstance(numeric[1], TmParams)
+    assert (numeric[1].a, numeric[1].f_inv) == _ELLPS["BESSEL"]
+    _assert_same(numeric[1], by_name[1])
+    geog = parse_proj4(f"+proj=longlat +a=6377397.155 +rf=299.1528128 {SHIFT}")
+    assert (geog[1].a, geog[1].f_inv) == _ELLPS["BESSEL"]
+
+
+@pytest.mark.parametrize("proj4", [
+    "+proj=utm +zone=32 +ellps=foo",
+    f"+proj=utm +zone=32 +ellps=foo {SHIFT}",
+    "+proj=longlat +ellps=foo",
+])
+def test_proj4_unknown_ellipsoid_name_is_refused(proj4):
+    with pytest.raises(ValueError, match="unsupported ellipsoid 'FOO'"):
+        parse_proj4(proj4)
+
+
+def test_proj4_unshifted_datum_name_needs_no_ellipsoid():
+    # ETRS89 is no ellipsoid name, but it implies no shift, so the
+    # UTM and lon/lat descriptors never read an ellipsoid
+    assert parse_proj4("+proj=utm +zone=32 +datum=ETRS89") == (
+        "utm", (32, True)
+    )
+    assert parse_proj4("+proj=longlat +datum=ETRS89") == ("lonlat", None)
+
+
+def test_shifted_geographic_crs_is_warped_through_its_shift(spark):
+    # a 3×3 lon/lat patch in Bessel/DHDN coordinates, one pixel per
+    # row; at zoom 16 (~2.4 m cells) the ~100 m shift moves every key
+    crs = f"+proj=longlat +ellps=bessel {SHIFT}"
+    d = 2.0 ** -12
+    rows = [(0, i, j, float(3 * j + i), 9.0, 49.0, d, d)
+            for i in range(3) for j in range(3)]
+    ddl = ("band int, px int, py int, value double, "
+           "x0 double, y0 double, dx double, dy double")
+    px = spark.createDataFrame(rows, ddl)
+    keys = ["tile_col", "tile_row", "px", "py"]
+
+    def warp(df, src):
+        out = reproject_pixels_to_webmercator(df, 16, "t", src_crs=src)
+        return {r["value"]: tuple(r[k] for k in keys) for r in out.collect()}
+
+    # the reference: each pixel centre shifted on the driver's own
+    # query, then keyed as a WGS84 pixel of negligible size there
+    a, f_inv = _ELLPS["BESSEL"]
+    centres = px.select(
+        "value",
+        (px.x0 + (px.px + 0.5) * px.dx).alias("lon"),
+        (px.y0 - (px.py + 0.5) * px.dy).alias("lat"),
+    )
+    lon, lat = datum_shift_to_wgs84(
+        centres.lon, centres.lat, a, f_inv, parse_proj4(crs)[1].helmert
+    )
+    tiny = 1e-9
+    shifted = [
+        (0, 0, 0, r["value"], r["lon"] - tiny / 2, r["lat"] + tiny / 2,
+         tiny, tiny)
+        for r in centres.select("value", lon.alias("lon"),
+                                   lat.alias("lat")).collect()
+    ]
+    got = warp(px, crs)
+    assert len(got) == 9
+    assert got == warp(spark.createDataFrame(shifted, ddl), "EPSG:4326")
+    unshifted = warp(px, "EPSG:4326")
+    assert all(got[v] != unshifted[v] for v in got)

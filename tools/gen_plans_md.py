@@ -121,11 +121,11 @@ SHOWCASE = {
         "ordering, no pixel self-join anywhere in the plan"
     ),
     "watershed_basins": (
-        "pointer doubling over a functional graph: every round is one "
-        "hash equi-join of the checkpointed parent map with itself "
-        "(LogicalRDD scans, lineage flat), so FULL basins resolve in "
-        "O(log diameter) rounds and the final census is one partial-"
-        "aggregated groupBy on the root id"
+        "block-local basins (Barnes 2017): the block kernel's one "
+        "checkpointed pass (LogicalRDD scan, lineage flat) holds every "
+        "cell's terminal; on the one-block fixture grid no perimeter "
+        "round runs, and the final census is one partial-aggregated "
+        "groupBy on the root id"
     ),
     "media_exif": (
         "zero-shuffle multimodal extraction: template synthesis is a "
