@@ -401,8 +401,9 @@ def cmd_classify(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Rewrite a layer partition into few globally Z-ordered files
-    (restores the pruning contract after incremental merges)."""
+    """Rewrite a layer into few globally Z-ordered files as a new
+    snapshot (restores the pruning contract after incremental
+    merges)."""
     spark = _spark(args)
     cat = _catalog(spark, args)
     cat.compact_layer(args.layer, args.zoom, target_files=args.target_files)
@@ -411,13 +412,11 @@ def cmd_compact(args) -> int:
 
 
 def cmd_vacuum(args) -> int:
-    """Drop versioned-store snapshots older than the newest N
+    """Drop a catalog layer's snapshots older than the newest N
     (data dirs shared with kept versions survive)."""
-    from biggis_landuse_spark.versioning import VersionedLayerStore
-
     spark = _spark(args)
-    store = VersionedLayerStore(spark, args.catalog)
-    deleted = store.vacuum(args.layer, args.zoom, keep=args.keep)
+    cat = _catalog(spark, args)
+    deleted = cat.store.vacuum(args.layer, args.zoom, keep=args.keep)
     print(f"vacuumed {len(deleted)} data dirs from {args.layer}/{args.zoom}")
     return 0
 
@@ -640,7 +639,7 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--target-files", type=int, default=1)
     sp.set_defaults(fn=cmd_compact)
 
-    sp = sub.add_parser("vacuum", help="drop old versioned snapshots")
+    sp = sub.add_parser("vacuum", help="drop a layer's old snapshots")
     common(sp)
     sp.add_argument("--layer", required=True)
     sp.add_argument("--zoom", type=int, required=True)

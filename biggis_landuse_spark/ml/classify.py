@@ -95,10 +95,10 @@ def train_ova(
         classifier=svc, labelCol="label", featuresCol="features_vec"
     )
     # copy() drops each sub-model's training summary, which holds the
-    # SparkSession: once the session has run an Observation (catalog.
-    # write_layer, operators.flow), it no longer serializes, and the
-    # predict UDF's closure (which captures the model) fails with
-    # "Task not serializable". Nothing here reads the summaries.
+    # SparkSession: once the session has run a pyspark.sql.Observation
+    # (the package runs none; user code may), it no longer serializes,
+    # and the predict UDF's closure (which captures the model) fails
+    # with "Task not serializable". Nothing here reads the summaries.
     return ovr.fit(data).copy()
 
 

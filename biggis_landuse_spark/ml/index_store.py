@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from biggis_landuse_spark.catalog import read_json, write_json
+from biggis_landuse_spark.versioning import read_json, write_json
 
 
 def _read_manifest(spark: SparkSession, path: str) -> dict:

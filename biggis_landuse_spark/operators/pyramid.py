@@ -150,7 +150,7 @@ def build_pyramid(catalog, layer: str, from_zoom: int, to_zoom: int = 0) -> None
     """Write every level from ``from_zoom`` down to ``to_zoom``
     (reference: Pyramid.upLevels + writeRddToLayer per level,
     LayerToPyramid.scala:55-65). Each level is read back from the
-    catalog (cheap, pruned) so lineage stays short and each write is
+    catalog (a snapshot read, no job) so lineage stays short and each write is
     independent."""
     current = catalog.read_layer(layer, from_zoom)
     crs = catalog.layer_crs(layer, from_zoom)
@@ -185,14 +185,14 @@ def update_pyramid(
     the layer never shuffles), pyramid_up downsamples just those
     groups, and the level is rewritten with the recomputed parents
     replacing their old tiles (a parent is a pure function of its 4
-    children, so whole-tile replace is exact). Same staging discipline
-    as merge_into_layer: never read + overwrite one partition in a
-    single job.
+    children, so whole-tile replace is exact). The rewrite commits a
+    new snapshot of the level while the old one is read, so no staging
+    copy is needed.
 
     Compute is proportional to |changed|·levels; the level REWRITE is
-    I/O-bound at the catalog's overwrite granularity (layer, zoom) —
-    identical to merge_into_layer's documented cost, and the reason
-    the affected-parent computation must be (and is) incremental.
+    I/O-bound at the catalog's snapshot granularity (layer, zoom) —
+    identical to merge_into_layer's cost, and the reason the
+    affected-parent computation must be (and is) incremental.
     Levels must already exist (build_pyramid first) — a missing level
     raises instead of silently writing a sparse pyramid.
     """
@@ -230,10 +230,7 @@ def update_pyramid(
             .join(F.broadcast(parents), ["tile_col", "tile_row"], "left_anti")
             .select("tile_col", "tile_row", "ts", "tile")
         )
-        merged = kept.unionByName(new_parents)
-        tmp = f"{catalog.base}/_staging/pyramid/{layer}/{z - 1}"
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = catalog.spark.read.parquet(tmp)
-        catalog.write_layer(staged, layer, z - 1, crs=crs)
-        catalog._delete_dir(f"{catalog.base}/_staging")
+        catalog.write_layer(
+            kept.unionByName(new_parents), layer, z - 1, crs=crs
+        )
         keys = parents

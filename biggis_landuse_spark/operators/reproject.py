@@ -248,20 +248,22 @@ _TOWGS84 = {
 }
 
 # A datum NAME (proj4 ``+datum=``, WKT ``DATUM["…"]``, uppercased)
-# resolves to the first entry with a spelling it contains. The last
-# entry is the geocentric frames — GRS80-based (ETRS89, RGF93, NAD83,
-# NZGD2000), a null shift vs WGS84 at this accuracy class.
+# resolves to the first entry with a spelling it contains: the datum's
+# ellipsoid (an ``_ELLPS`` name) and its shift to WGS84. The geocentric
+# frames (ETRS89, RGF93, NAD83, NZGD2000) are GRS80-based, a null shift
+# vs WGS84 at this accuracy class; NAD27 is a grid-shift datum.
 _DATUM_NAMES = (
-    (("OSGB", "ORDNANCE_SURVEY"), _TOWGS84["OSGB36"]),
-    (("DHDN", "HAUPTDREIECKSNETZ", "POTSDAM"), _TOWGS84["DHDN"]),
-    (("CH1903",), _TOWGS84["CH1903"]),  # CH1903 and CH1903+
-    (("AMERSFOORT",), _TOWGS84["AMERSFOORT"]),
-    (("TIMBALAI",), _TOWGS84["TIMBALAI"]),
+    (("OSGB", "ORDNANCE_SURVEY"), "AIRY", _TOWGS84["OSGB36"]),
+    (("DHDN", "HAUPTDREIECKSNETZ", "POTSDAM"), "BESSEL", _TOWGS84["DHDN"]),
+    (("CH1903",), "BESSEL", _TOWGS84["CH1903"]),  # CH1903 and CH1903+
+    (("AMERSFOORT",), "BESSEL", _TOWGS84["AMERSFOORT"]),
+    (("TIMBALAI",), "EVRSTSS", _TOWGS84["TIMBALAI"]),
     # D_S_JTSK / System_Jednotne_Trigonometricke_Site_Katastralni
-    (("JTSK", "JEDNOTNE"), _TOWGS84["SJTSK"]),
-    (("WGS_1984", "WGS84", "WGS 1984", "ETRS", "GRS80",
-      "NORTH_AMERICAN_1983", "NAD83", "NZGD2000",
-      "NEW_ZEALAND_GEODETIC_DATUM_2000"), None),
+    (("JTSK", "JEDNOTNE"), "BESSEL", _TOWGS84["SJTSK"]),
+    (("NAD27",), "CLRK66", DATUM_UNKNOWN),
+    (("WGS_1984", "WGS84", "WGS 1984"), "WGS84", None),
+    (("ETRS", "GRS80", "NORTH_AMERICAN_1983", "NAD83", "NZGD2000",
+      "NEW_ZEALAND_GEODETIC_DATUM_2000"), "GRS80", None),
 )
 
 
@@ -1633,7 +1635,7 @@ def sinu_ell_to_lonlat(
 
 _ELLPS = {
     # name → (semi-major a, inverse flattening 1/f); proj4 +ellps=
-    # names, uppercased, plus the +datum= spellings that imply one
+    # names, uppercased (a +datum= name finds its own via _DATUM_NAMES)
     "GRS80": (6378137.0, 298.257222101),
     "WGS84": (6378137.0, 298.257223563),
     "AIRY": (6377563.396, 299.3249646),      # OSGB36
@@ -1642,11 +1644,6 @@ _ELLPS = {
     "CLRK66": (6378206.4, 294.9786982),      # NAD27
     "KRASS": (6378245.0, 298.3),             # Pulkovo
     "EVRSTSS": (6377298.556, 300.8017),      # Everest Sabah/Sarawak
-    # datum → ellipsoid aliases
-    "OSGB36": (6377563.396, 299.3249646),
-    "POTSDAM": (6377397.155, 299.1528128),
-    "NAD27": (6378206.4, 294.9786982),
-    "NAD83": (6378137.0, 298.257222101),
 }
 
 
@@ -1673,13 +1670,14 @@ def _towgs84(vals: list[float], src: str) -> HelmertParams | None:
 
 
 def _named_datum(name: str):
-    """Shift for a datum name per ``_DATUM_NAMES``: HelmertParams,
-    None (geocentric) or DATUM_UNKNOWN (no entry matches)."""
+    """(ellipsoid name, shift) for a datum name per ``_DATUM_NAMES``;
+    the shift is HelmertParams, None (geocentric) or DATUM_UNKNOWN,
+    and (None, DATUM_UNKNOWN) when no entry matches."""
     name = name.upper()
-    for spellings, shift in _DATUM_NAMES:
+    for spellings, ellps, shift in _DATUM_NAMES:
         if any(s in name for s in spellings):
-            return shift
-    return DATUM_UNKNOWN
+            return ellps, shift
+    return None, DATUM_UNKNOWN
 
 
 def _proj4_datum(kv: dict, proj4: str):
@@ -1698,9 +1696,9 @@ def _proj4_datum(kv: dict, proj4: str):
             raise ValueError(f"malformed +towgs84: {proj4!r}") from None
         return _towgs84(vals, proj4)
     if kv.get("datum"):
-        return _named_datum(kv["datum"])  # NAD27 etc.: grid-shift datums
+        return _named_datum(kv["datum"])[1]  # NAD27 etc.: grid-shift datums
     ellps = kv.get("ellps")
-    if ellps and _named_datum(ellps) is not None:
+    if ellps and _named_datum(ellps)[1] is not None:
         return DATUM_UNKNOWN  # named legacy ellipsoid, no towgs84
     return None  # WGS84/GRS80, explicit numeric, or default
 
@@ -1715,7 +1713,7 @@ def _wkt_datum(wkt: str, a: float, rf: float):
     if m:
         return _towgs84([float(v) for v in m.group(1).split(",")], m.group(0))
     d = re.search(r'DATUM\s*\[\s*"([^"]+)"', wkt, re.IGNORECASE)
-    hel = _named_datum(d.group(1) if d else "")
+    hel = _named_datum(d.group(1) if d else "")[1]
     if hel is not DATUM_UNKNOWN:
         return hel
     if math.isinf(rf):  # sphere: datum-less abstraction
@@ -1805,6 +1803,8 @@ class _Args:
         if "a" in kv and "ellps" not in kv and "datum" not in kv:
             return self.num("a"), math.inf  # PROJ: a bare +a is a sphere
         name = (kv.get("ellps") or kv.get("datum") or "WGS84").upper()
+        if not kv.get("ellps") and kv.get("datum"):
+            name = _named_datum(name)[0] or name
         if name in _ELLPS:
             return _ELLPS[name]
         raise ValueError(
@@ -2565,7 +2565,7 @@ def ingest_layers_webmercator(
     independent shuffles one after another, leaving most cores idle
     during each band's tail stages. Spark's scheduler interleaves
     concurrently-submitted jobs natively; each write_layer commits an
-    independent (layer, zoom) partition and its own metadata and
+    independent (layer, zoom) snapshot and its own metadata and
     attribute files, so the threads share no state. Raises the first
     failure after all threads settle."""
     from concurrent.futures import ThreadPoolExecutor
@@ -2576,10 +2576,9 @@ def ingest_layers_webmercator(
             spark, path, layer, zoom=zoom, tile_size=tile_size,
             src_crs=src_crs, chunk_rows=chunk_rows,
         )
-        # dynamic-partition-overwrite stages each job in its own
-        # .spark-staging-<jobId> dir and commits only its (layer,
-        # zoom) partition, and the catalog keeps one metadata file per
-        # key, so concurrent write_layer calls need no lock
+        # each write commits its own (layer, zoom) snapshot, and the
+        # catalog keeps one metadata file per key, so concurrent
+        # write_layer calls need no lock
         catalog.write_layer(tiles.drop("layer", "zoom"), layer, zoom)
 
     with ThreadPoolExecutor(max_workers=max_parallel) as ex:

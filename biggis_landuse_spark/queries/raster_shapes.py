@@ -3981,10 +3981,10 @@ def krovak_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     into per-(day, cell) integer-cent pixel values, assemble into
     dense 4x4 tiles per day (pixels_to_tiles), write through
     LayerCatalog.write_layer — whose time-major + Z-curve sort order
-    (catalog.py:85-91) makes the parquet row-group stats prune BOTH
-    time and space predicates — then read back with a
-    time_range=[Jan 8, Jan 23) pushed-down filter (catalog.py:264)
-    and roll up per day. Every step before/after the disk round trip
+    (VersionedLayerStore.write) makes the parquet row-group stats
+    prune BOTH time and space predicates — then read back with a
+    time_range=[Jan 8, Jan 23) pushed-down filter
+    (LayerCatalog.read_layer) and roll up per day. Every step before/after the disk round trip
     is exact integer arithmetic, so the oracle derives the identical
     result straight from events. This is the ts-keyed twin the r6
     verdict asked the driver to be able to hash-check (the path was
@@ -3992,8 +3992,9 @@ def krovak_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE shuffle to tile (groupBy day-cell reuses it), a
     range-partitioned parallel write (never a single-task funnel), and
-    the read is a partition-pruned scan whose ts predicate lands in
-    PushedFilters (pinned by test_raster_core's plan assertion).""",
+    the read is a scan of the committed snapshot whose ts predicate
+    lands in PushedFilters (pinned by test_raster_core's plan
+    assertion).""",
     tags=("S3", "S4", "CATALOG"),
 )
 def space_time_layer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,9 +15,9 @@ read (HadoopValueReader, ServeLayerAsMap.scala:33,111), renders with a
   stdlib-only encoder (zlib + struct — no image libraries needed)
   inside ``mapInPandas``;
 - ``lookup_tile``: the ms-latency point read. Spark is the wrong tool
-  for per-request reads (SURVEY.md §1.3) — this goes straight to the
-  partition-pruned parquet path with filters on the Z-order key
-  range, which is exactly what the catalog's sorted layout indexes;
+  for per-request reads (SURVEY.md §1.3) — this reads the layer's
+  committed snapshot with filters on the Z-order key range, which is
+  exactly what the store's sorted layout indexes;
   an HTTP frontend would cache these.
 """
 
@@ -195,7 +195,7 @@ def lookup_tile(
 ) -> DataFrame:
     """Indexed point read for ``GET /{zoom}/{x}/{y}``.
 
-    Partition pruning on (layer, zoom) + min/max row-group pruning on
+    One (layer, zoom) snapshot read + min/max row-group pruning on
     the Z-ordered (tile_col, tile_row) sort — the catalog's analog of
     the reference's SFC value reader (ServeLayerAsMap.scala:33).
     """
@@ -313,7 +313,7 @@ class TileServer:
 
     Per SURVEY.md §1.3, Spark is the wrong engine for per-request
     ms-latency reads, so the server renders the requested zoom ONCE in
-    bulk (one Spark job over the partition-pruned layer read, PNG
+    bulk (one Spark job over the layer's snapshot read, PNG
     encoding executor-side via render_tiles_png) and serves from an
     in-process dict — the 'small in-process cache over the same
     Parquet' design. Unrendered zooms are rendered on first request.
@@ -374,34 +374,24 @@ class TileServer:
         return self._cache.get((zoom, x, y))
 
     def meta(self) -> dict:
-        """Layer zooms + coarsest-level tile bounds for the map client
-        (one metadata-sized agg, computed once)."""
+        """Layer zooms + coarsest-level tile bounds for the map client,
+        from the catalog's metadata records (no Spark job)."""
         if getattr(self, "_meta", None) is None:
             zooms = sorted(
                 z for (l, z) in self.catalog.layer_ids() if l == self.layer
             )
             if not zooms:
                 raise KeyError(f"layer not found: {self.layer}")
-            z0 = zooms[0]
-            b = (
-                self.catalog.read_layer(self.layer, z0)
-                .agg(
-                    F.min("tile_col").alias("c0"),
-                    F.max("tile_col").alias("c1"),
-                    F.min("tile_row").alias("r0"),
-                    F.max("tile_row").alias("r1"),
-                )
-                .first()
-            )
+            m = self.catalog.layer_meta(self.layer, zooms[0])
             self._meta = {
                 "layer": self.layer,
                 "zooms": zooms,
                 "bounds": {
-                    "zoom": z0,
-                    "col_min": b["c0"],
-                    "col_max": b["c1"],
-                    "row_min": b["r0"],
-                    "row_max": b["r1"],
+                    "zoom": zooms[0],
+                    "col_min": m["key_col_min"],
+                    "col_max": m["key_col_max"],
+                    "row_min": m["key_row_min"],
+                    "row_max": m["key_row_max"],
                 },
             }
         return self._meta

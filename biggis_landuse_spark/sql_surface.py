@@ -59,9 +59,9 @@ def register_catalog_views(
 ) -> list[str]:
     """Register the layer catalog for SQL: ``catalog_layers`` (the
     metadata relation) plus one ``layer_<name>_z<zoom>`` view per
-    stored (layer, zoom) — each a plain partition-pruned parquet read,
-    so SQL over a layer view scans exactly what ``read_layer``
-    would."""
+    stored (layer, zoom) — each the ``read_layer`` frame of its
+    committed snapshot, so SQL over a layer view scans exactly what
+    ``read_layer`` would."""
     from biggis_landuse_spark.catalog import LayerCatalog
 
     cat = LayerCatalog(spark, catalog_dir)

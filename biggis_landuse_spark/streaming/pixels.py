@@ -28,17 +28,16 @@ as ``CASE WHEN seen[i] THEN vals[i] ELSE NULL END`` over plain column
 references. Missing cells in a flushed partial tile are NULL (the
 engine's relational NODATA, SURVEY.md §1.2).
 
-r9 throughput rewrite (VERDICT r8 #5, measured in SCALING.md): the r8
-shape kept a per-tile Python dict (per-pixel loop) and densified
-JVM-side with ``map_from_arrays(idx, vals)[i]`` inside the nested
-transform — Catalyst re-evaluates the map constructor PER ELEMENT, so
-each tile paid O(size²) map builds (the same
-expression-producer-re-evaluation trap as the r6 as_double lesson).
-Now the kernel scatters each Arrow batch into a dense numpy array
-(vectorized, no per-pixel Python), state round-trips as the same two
-null-free arrays, and the densify is O(size) column indexing. NaN
-input values count as NODATA (the cell stays missing) — the
-relational contract, and NaN must not cross the Arrow state boundary.
+The kernel scatters each Arrow batch into a dense numpy array (no
+per-pixel Python) and the densify is O(size) column indexing (a
+``map_from_arrays(idx, vals)[i]`` form is re-evaluated per element by
+Catalyst: O(size²) per tile; measured in SCALING.md). NaN input values
+count as NODATA (the cell stays missing) — the relational contract,
+and NaN must not cross the Arrow state boundary.
+
+Both sinks run one ``foreachBatch`` body, ``versioned_batch_writer``:
+``stream_to_catalog`` on the catalog's store, plus a publish of its
+records; each micro-batch commits atomically and exactly once.
 """
 
 from __future__ import annotations
@@ -272,9 +271,11 @@ def stream_to_catalog(
     stream → tiles → catalog layer, TilePixelingExample.scala:74-94 +
     WorkflowExample.scala:153-162).
 
-    First batch creates the layer; later batches MERGE (cell-level
-    coalesce, S6 semantics), so re-delivered tiles are idempotent
-    overwrites and partial tiles can be completed by later batches.
+    Each batch runs :func:`versioned_batch_writer` on the catalog's
+    store (so a re-delivered batch is skipped: exactly-once), then
+    publishes the layer's metadata record and histogram. The first
+    batch creates the layer; later batches MERGE (cell-level coalesce,
+    S6 semantics), so partial tiles can be completed by later batches.
     Returns the DataStreamWriter (caller picks trigger/start).
 
     ``maintain_pyramid_to``: keep the zoom pyramid down to this level
@@ -284,58 +285,33 @@ def stream_to_catalog(
     cost tracks the batch size, not the layer size — the serving
     story for a continuously-ingested 100 TB layer).
     """
-    from biggis_landuse_spark.pixeling import tile_col_expr
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tiles = batch_df
-        if complete_only:
-            tiles = tiles.where(F.col("complete"))
-        staged = tiles.select(
-            "tile_col",
-            "tile_row",
-            F.lit(None).cast("timestamp").alias("ts"),
-            tile_col_expr(cols, rows, cell_type, F.col("bands")).alias("tile"),
-        )
-        # persist: the emptiness probe, the layer write, and the
-        # pyramid maintenance are separate actions, each otherwise
-        # replaying the micro-batch plan (see versioned_batch_writer)
-        staged = staged.persist()
-        try:
-            if not staged.take(1):
-                return
-            if (layer, zoom) in catalog.layer_ids():
-                catalog.merge_into_layer(staged, layer, zoom)
+    def published(staged: DataFrame) -> None:
+        catalog._publish(layer, zoom)
+        if maintain_pyramid_to is not None and zoom > maintain_pyramid_to:
+            from biggis_landuse_spark.operators.pyramid import (
+                build_pyramid,
+                update_pyramid,
+            )
+
+            levels = {z for (l, z) in catalog.layer_ids() if l == layer}
+            if set(range(maintain_pyramid_to, zoom)) - levels:
+                build_pyramid(
+                    catalog, layer, from_zoom=zoom, to_zoom=maintain_pyramid_to,
+                )
             else:
-                catalog.write_layer(staged, layer, zoom)
-            if maintain_pyramid_to is not None and zoom > maintain_pyramid_to:
-                from biggis_landuse_spark.operators.pyramid import (
-                    build_pyramid,
-                    update_pyramid,
+                update_pyramid(
+                    catalog,
+                    layer,
+                    staged.select("tile_col", "tile_row"),
+                    from_zoom=zoom,
+                    to_zoom=maintain_pyramid_to,
                 )
 
-                levels = {z for (l, z) in catalog.layer_ids() if l == layer}
-                if set(range(maintain_pyramid_to, zoom)) - levels:
-                    build_pyramid(
-                        catalog, layer,
-                        from_zoom=zoom, to_zoom=maintain_pyramid_to,
-                    )
-                else:
-                    update_pyramid(
-                        catalog,
-                        layer,
-                        staged.select("tile_col", "tile_row"),
-                        from_zoom=zoom,
-                        to_zoom=maintain_pyramid_to,
-                    )
-        finally:
-            staged.unpersist()
-
-    writer = tile_stream.writeStream.foreachBatch(write_batch).outputMode(
-        "append"
+    return stream_to_versioned(
+        tile_stream, catalog.store, layer, cols, rows, zoom, cell_type,
+        checkpoint, complete_only, on_commit=published,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
 
 
 def versioned_batch_writer(
@@ -346,22 +322,34 @@ def versioned_batch_writer(
     zoom: int = 0,
     cell_type: str = "float64",
     complete_only: bool = True,
+    on_commit=None,
 ):
-    """The foreachBatch function behind :func:`stream_to_versioned`,
-    exposed so the crash/replay path is directly testable: calling it
-    twice with the same ``batch_id`` commits exactly once."""
+    """The foreachBatch function behind :func:`stream_to_versioned` and
+    :func:`stream_to_catalog`, exposed so the crash/replay path is
+    directly testable. A commit's manifest records its (streaming query
+    id, batch id) — the id from the ``sql.streaming.queryId`` local
+    property — and a re-delivered pair commits nothing: a query
+    restarted from its checkpoint keeps its id, a new query into the
+    same layer gets a new one; a call outside a stream (no query id)
+    matches the batch id of any query. ``on_commit(tiles)`` runs
+    after each commit on the batch's persisted tiles; when it fails,
+    the restarted stream re-delivers the batch, which (being the newest
+    commit) runs ``on_commit`` again — the catalog's publish and
+    pyramid upkeep are idempotent for one batch's keys."""
     from biggis_landuse_spark.pixeling import tile_col_expr
 
-    def committed_batch_ids() -> set:
-        out = set()
-        for v in store.versions(layer, zoom):
-            m = store._read_manifest(layer, zoom, v)
-            if "batch_id" in m:
-                out.add(m["batch_id"])
-        return out
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_batch_ids():
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        vs = store.versions(layer, zoom)
+        done = [
+            m.get("batch_id") == batch_id
+            and query_id in (None, m.get("query_id"))
+            for m in (store._read_manifest(layer, zoom, v) for v in vs)
+        ]
+        replay = any(done)
+        if replay and (on_commit is None or not done[-1]):
             return  # re-delivered after crash: already committed
         tiles = batch_df
         if complete_only:
@@ -372,20 +360,23 @@ def versioned_batch_writer(
             F.lit(None).cast("timestamp").alias("ts"),
             tile_col_expr(cols, rows, cell_type, F.col("bands")).alias("tile"),
         )
-        # the emptiness probe and the store write are two actions, and
-        # inside foreachBatch each action replays the whole micro-batch
-        # plan (stateful reassembly included) — persist so the batch's
-        # tiles materialize once (measured ~2x on the sink stage of
-        # the pipeline_scene leg)
+        # the emptiness probe, the store write and ``on_commit`` are
+        # separate actions, and inside foreachBatch each action replays
+        # the whole micro-batch plan (stateful reassembly included) —
+        # persist so the batch's tiles materialize once (measured ~2x
+        # on the sink stage of the pipeline_scene leg)
         staged = staged.persist()
         try:
             if not staged.take(1):
                 return
-            extra = {"batch_id": batch_id}
-            if store.versions(layer, zoom):
-                store.merge(staged, layer, zoom, extra=extra)
-            else:
-                store.write(staged, layer, zoom, extra=extra)
+            if not replay:  # (a replay only re-runs ``on_commit``)
+                extra = {"batch_id": batch_id, "query_id": query_id}
+                if vs:
+                    store.merge(staged, layer, zoom, extra=extra)
+                else:
+                    store.write(staged, layer, zoom, extra=extra)
+            if on_commit is not None:
+                on_commit(staged)
         finally:
             staged.unpersist()
 
@@ -402,22 +393,25 @@ def stream_to_versioned(
     cell_type: str = "float64",
     checkpoint: str | None = None,
     complete_only: bool = True,
+    on_commit=None,
 ):
     """Exactly-once streaming ingest into a
-    :class:`~biggis_landuse_spark.versioning.VersionedLayerStore`.
+    :class:`~biggis_landuse_spark.versioning.VersionedLayerStore`
+    (``on_commit``: see :func:`versioned_batch_writer`).
 
     foreachBatch is at-least-once: after a crash between "batch
     written" and "offsets checkpointed", the SAME batch_id is
-    re-delivered. The unversioned path tolerates that because merge is
-    idempotent cell-wise; here we make it exact: every commit manifest
-    records its ``batch_id``, and a re-delivered batch whose id is
-    already committed is SKIPPED. Atomic-rename commits + transactional
-    batch-id dedup = end-to-end exactly-once from a replayable source,
+    re-delivered. A cell-wise merge would tolerate that; here it is
+    exact: every commit manifest records its streaming query id and
+    ``batch_id``, and a re-delivered batch whose (query id, batch id)
+    is already committed is SKIPPED.
+    Atomic-rename commits + transactional batch-id dedup = end-to-end
+    exactly-once from a replayable source,
     the guarantee the reference's sketched Kafka pipeline (SURVEY.md
     §2.9) had no story for.
     """
     write_batch = versioned_batch_writer(
-        store, layer, cols, rows, zoom, cell_type, complete_only
+        store, layer, cols, rows, zoom, cell_type, complete_only, on_commit
     )
     writer = tile_stream.writeStream.foreachBatch(write_batch).outputMode(
         "append"

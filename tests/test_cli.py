@@ -133,33 +133,29 @@ def test_cli_layers_listing(spark, workspace, capsys):
     assert "red" in out and "nir" in out and "crs=EPSG:3857" in out
 
 
-def test_cli_compact_and_vacuum(spark, workspace, tmp_path):
+def test_cli_compact_and_vacuum(spark, workspace):
     import glob
 
-    from biggis_landuse_spark.versioning import VersionedLayerStore
+    from biggis_landuse_spark.catalog import LayerCatalog
 
     _, cat = workspace
+    store = LayerCatalog(spark, cat).store
+    before = store.versions("red", 0)
     assert main([
         "compact", "--catalog", cat, "--layer", "red", "--zoom", "0",
         "--target-files", "1",
     ]) == 0
-    files = glob.glob(f"{cat}/tiles/layer=red/zoom=0/*.parquet")
-    assert len(files) == 1
-
-    store = VersionedLayerStore(spark, str(tmp_path / "vstore"))
-    from biggis_landuse_spark.catalog import LayerCatalog
-
-    tiles = LayerCatalog(spark, cat).read_layer("red", 0).select(
-        "tile_col", "tile_row", "ts", "tile"
-    )
-    store.write(tiles, "v", 0)
-    store.write(tiles, "v", 0)
-    store.write(tiles, "v", 0)
+    # the compacted snapshot is current; the superseded one stays on
+    # disk until vacuum reclaims it
+    compacted = before[-1] + 1
+    assert store.versions("red", 0) == [*before, compacted]
     assert main([
-        "vacuum", "--catalog", str(tmp_path / "vstore"), "--layer", "v",
-        "--zoom", "0", "--keep", "1",
+        "vacuum", "--catalog", cat, "--layer", "red", "--zoom", "0",
+        "--keep", "1",
     ]) == 0
-    assert store.versions("v", 0) == [3]
+    assert store.versions("red", 0) == [compacted]
+    files = glob.glob(f"{cat}/tiles/red/0/v*/*.parquet")
+    assert len(files) == 1
 
 
 def test_cli_samples_and_classify(spark, tmp_path):

@@ -6,20 +6,26 @@ shrink the file count without changing the data."""
 from __future__ import annotations
 
 import glob
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from biggis_landuse_spark.catalog import LayerCatalog, zorder_key
+from biggis_landuse_spark.catalog import LayerCatalog
+from biggis_landuse_spark.versioning import zorder_key
 from biggis_landuse_spark.fixtures import fixture_layer
 
 pytestmark = pytest.mark.slow
 
 
 def _files(base: str, layer: str, zoom: int) -> list[str]:
-    return glob.glob(
-        f"{base}/tiles/layer={layer}/zoom={zoom}/part-*.parquet"
-    )
+    """The data files of the layer's current snapshot: the newest
+    manifest names its directory."""
+    manifests = glob.glob(f"{base}/tiles/{layer}/{zoom}/_manifests/v*.json")
+    newest = max(manifests, key=lambda p: int(os.path.basename(p)[1:-5]))
+    with open(newest) as f:
+        return glob.glob(f"{json.load(f)['data']}/part-*.parquet")
 
 
 @pytest.fixture()
@@ -43,7 +49,7 @@ def test_write_layer_splits_across_files(catalog, grid):
 def test_write_layer_files_have_disjoint_zkey_ranges(spark, catalog, grid):
     catalog.write_layer(grid, "lay", 3, target_files=4)
     per_file = (
-        spark.read.parquet(f"{catalog.tiles_path}/layer=lay/zoom=3")
+        spark.read.parquet(*_files(catalog.base, "lay", 3))
         .withColumn("_zk", zorder_key())
         .withColumn("_f", F.input_file_name())
         .groupBy("_f")
@@ -85,7 +91,7 @@ def test_hilbert_key_is_a_hilbert_curve(spark):
     Manhattan-distance-1 neighbors — the defining Hilbert property
     (Z-order fails this: its diagonal jumps are what Hilbert's range
     locality improves on)."""
-    from biggis_landuse_spark.catalog import with_hilbert_key
+    from biggis_landuse_spark.versioning import with_hilbert_key
 
     n = 8
     grid = spark.createDataFrame(
@@ -109,7 +115,7 @@ def test_hilbert_matches_zorder_bit_budget(spark):
     """Full-width (16-bit) keys stay within the same non-negative
     63-bit budget as zorder_key, and remain bijective on a sparse
     high-coordinate sample."""
-    from biggis_landuse_spark.catalog import Z_BITS, with_hilbert_key
+    from biggis_landuse_spark.versioning import Z_BITS, with_hilbert_key
 
     hi = (1 << Z_BITS) - 1
     pts = [(c, r) for c in (0, 1, 777, hi - 1, hi) for r in (0, 5, hi)]
@@ -123,12 +129,12 @@ def test_hilbert_matches_zorder_bit_budget(spark):
 def test_write_layer_hilbert_files_have_disjoint_key_ranges(
     spark, catalog, grid
 ):
-    from biggis_landuse_spark.catalog import with_hilbert_key
+    from biggis_landuse_spark.versioning import with_hilbert_key
 
     catalog.write_layer(grid, "lay", 3, target_files=4, index_method="hilbert")
     per_file = (
         with_hilbert_key(
-            spark.read.parquet(f"{catalog.tiles_path}/layer=lay/zoom=3"),
+            spark.read.parquet(*_files(catalog.base, "lay", 3)),
             out="_hk",
         )
         .withColumn("_f", F.input_file_name())

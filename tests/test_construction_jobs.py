@@ -1,8 +1,8 @@
 """Work without avoidable Spark jobs: the load_tables schema memo, the
 one-job D8 block queries and the exact-size broadcasts in their
-perimeter rounds, and the layer catalog's
-JSON attribute store (metadata observed on the write job, reads that
-run no job)."""
+perimeter rounds, and the layer catalog (snapshot reads and JSON
+records that run no job, metadata taken from the committed
+snapshot)."""
 
 from __future__ import annotations
 
@@ -186,6 +186,64 @@ def test_fixture_layer_histogram_and_metadata(written):
     assert meta.asDict() == META_B4_RED
 
 
+_NAN = float("nan")
+_SPREAD = (
+    '"counts": [[0, 1], [2, 1], [4, 1], [6, 1], [9, 1], [11, 1], [13, 1], '
+    '[15, 1]]}'
+)
+_PARTIAL = '{"lo": 1.0, "hi": 9.0, "counts": [[0, 1], [2, 2], [15, 1]]}'
+
+
+_FOOTER_CASES = [
+    # the footers drop a chunk's min/max for a NaN: the range falls back
+    # to an aggregation (Spark orders NaN above every number)
+    ("nan", [[[1.0, _NAN, 3.0, 4.0]], [[5.0, 6.0, 7.0, 8.0]]],
+     '{"lo": 1.0, "hi": NaN, "counts": [[0, 8]]}'),
+    # the footers write a zero minimum as -0.0 whatever its sign
+    ("zero", [[[0.0, 1.0, 2.0, 3.0]], [[4.0, 5.0, 6.0, 7.0]]],
+     '{"lo": 0.0, "hi": 7.0, ' + _SPREAD),
+    ("negzero", [[[-0.0, 1.0, 2.0, 3.0]], [[4.0, 5.0, 6.0, 7.0]]],
+     '{"lo": -0.0, "hi": 7.0, ' + _SPREAD),
+    # null cells are outside the range and count in bucket 0
+    ("nullcell", [[[None, 1.0, 2.0, 9.0]], [[None, None, None, None]]],
+     '{"lo": 1.0, "hi": 9.0, "counts": [[0, 6], [2, 1], [15, 1]]}'),
+    # a null or empty band holds no cell at all
+    ("nullband", [[[2.0, 1.0, 2.0, 9.0]], [None]], _PARTIAL),
+    ("emptyband", [[[2.0, 1.0, 2.0, 9.0]], [[]]], _PARTIAL),
+]
+
+
+@pytest.mark.parametrize(
+    "name, bands, histogram", _FOOTER_CASES, ids=[c[0] for c in _FOOTER_CASES]
+)
+def test_metadata_from_footers_matches_the_cells(
+    spark, tmp_path_factory, name, bands, histogram
+):
+    """Records as the array_min/array_max aggregation over the written
+    tiles gives them, for the cells the footer statistics handle
+    apart."""
+    from biggis_landuse_spark.pixeling import tile_col_expr
+    from pyspark.sql import functions as F
+
+    cat = LayerCatalog(spark, str(tmp_path_factory.mktemp("stats")))
+    tiles = spark.createDataFrame(
+        [(col, 0, b) for col, b in enumerate(bands)],
+        "tile_col int, tile_row int, bands array<array<double>>",
+    ).select(
+        "tile_col", "tile_row", F.lit(None).cast("timestamp").alias("ts"),
+        tile_col_expr(2, 2, "float64", F.col("bands")).alias("tile"),
+    )
+    cat.write_layer(tiles, name, 1)
+    assert cat.read_attribute(name, 1, "histogramData") == histogram
+    assert cat.layer_meta(name, 1) == {
+        "layer": name, "zoom": 1, "cell_type": "float64",
+        "crs": "EPSG:3857", "n_bands": 1, "tile_cols": 2, "tile_rows": 2,
+        "layout_cols": 2, "layout_rows": 1, "key_col_min": 0,
+        "key_col_max": 1, "key_row_min": 0, "key_row_max": 0,
+        "extent": None,
+    }
+
+
 def test_concurrent_writes_of_different_layers_are_all_visible(
     spark, tmp_path, red
 ):
@@ -267,5 +325,69 @@ def test_layer_name_with_slash_and_space_round_trips(spark, tmp_path, red):
     assert cat.layer_ids() == [("plain", 3)]
     assert cat.read_attribute(odd, 3, "histogramData") is None
     assert cat.read_layer("plain", 3).count() == FX.GRID * FX.GRID
-    left = spark.read.parquet(cat.tiles_path).select("layer").distinct()
-    assert [r["layer"] for r in left.collect()] == ["plain"]
+    assert [p.name for p in (tmp_path / "tiles").iterdir()] == ["plain"]
+
+
+def test_read_layer_builds_with_no_job(spark, written):
+    cat = written[0]
+    df, jobs = _jobs_run(spark, lambda: cat.read_layer("b4_red", 3))
+    assert jobs == 0
+    assert df.columns[-2:] == ["layer", "zoom"]
+    assert df.count() == FX.GRID * FX.GRID
+
+
+def test_held_read_keeps_its_snapshot_across_a_rewrite(spark, tmp_path, red):
+    cat = LayerCatalog(spark, str(tmp_path))
+    cat.write_layer(red, "b4_red", 3)
+    before = cat.read_layer("b4_red", 3)
+    cat.write_layer(red.where("tile_col = 0"), "b4_red", 3)
+    assert before.count() == FX.GRID * FX.GRID
+    assert cat.read_layer("b4_red", 3).count() == FX.GRID
+
+
+@pytest.mark.parametrize("name", ["2024", "2024-01-08"])
+def test_layer_name_reads_back_as_a_string(spark, tmp_path, red, name):
+    cat = LayerCatalog(spark, str(tmp_path))
+    cat.write_layer(red, name, 3)
+    df = cat.read_layer(name, 3)
+    assert df.schema["layer"].dataType.simpleString() == "string"
+    assert {r["layer"] for r in df.select("layer").collect()} == {name}
+
+
+def test_merge_keeps_the_layer_crs_and_runs_at_most_eight_jobs(
+    spark, tmp_path, red
+):
+    cat = LayerCatalog(spark, str(tmp_path))
+    cat.write_layer(red, "b4_red", 3, crs="EPSG:32632")
+    update = red.where("tile_col < 2")
+    _, jobs = _jobs_run(spark, lambda: cat.merge_into_layer(update, "b4_red", 3))
+    assert jobs <= 8
+    assert cat.layer_crs("b4_red", 3) == "EPSG:32632"
+    assert cat.read_layer("b4_red", 3).count() == FX.GRID * FX.GRID
+
+
+def test_write_layer_leaves_the_session_serializable(spark, tmp_path):
+    # an Observation registers the session's ObservationManager, which
+    # Java serialization refuses; the metadata comes from the snapshot
+    session = spark.newSession()
+    cat = LayerCatalog(session, str(tmp_path))
+    cat.write_layer(FX.fixture_layer(session, "b4_red"), "b4_red", 3)
+    jvm = spark._jvm
+    out = jvm.java.io.ObjectOutputStream(jvm.java.io.ByteArrayOutputStream())
+    out.writeObject(session._jsparkSession)
+    out.close()
+
+
+def test_tile_server_meta_reads_the_metadata_record(spark, written):
+    from biggis_landuse_spark.serving import TileServer
+
+    server = TileServer(written[0], "b4_red", [1000.0])
+    meta, jobs = _jobs_run(spark, server.meta)
+    assert jobs == 0
+    assert meta == {
+        "layer": "b4_red",
+        "zooms": [3],
+        "bounds": {
+            "zoom": 3, "col_min": 0, "col_max": 3, "row_min": 0, "row_max": 3,
+        },
+    }

@@ -298,6 +298,19 @@ def test_proj4_unshifted_datum_name_needs_no_ellipsoid():
     assert parse_proj4("+proj=longlat +datum=ETRS89") == ("lonlat", None)
 
 
+@pytest.mark.parametrize("proj4, ellps", [
+    ("+proj=tmerc +lat_0=0 +lon_0=9 +k=1 +x_0=0 +y_0=0 +datum=ETRS89",
+     "GRS80"),
+    ("+proj=longlat +datum=DHDN", "BESSEL"),
+    ("+proj=utm +zone=32 +datum=CH1903", "BESSEL"),
+])
+def test_proj4_datum_name_reads_its_ellipsoid(proj4, ellps):
+    # wherever a step reads the ellipsoid, a +datum= name with no
+    # +ellps= takes the one its _DATUM_NAMES entry declares
+    _, params = parse_proj4(proj4)
+    assert (params.a, params.f_inv) == _ELLPS[ellps]
+
+
 def test_shifted_geographic_crs_is_warped_through_its_shift(spark):
     # a 3×3 lon/lat patch in Bessel/DHDN coordinates, one pixel per
     # row; at zoom 16 (~2.4 m cells) the ~100 m shift moves every key

@@ -279,10 +279,9 @@ def test_split_samples_random_mode_contract(spark):
 
 
 def test_classifier_predicts_in_a_session_that_ran_an_observation(spark):
-    # an Observation (catalog.write_layer's metadata, the flow loops'
-    # counts) leaves the session unserializable; a model that kept its
-    # training summary, which holds the session, could then not ship
-    # its predict UDF
+    # an Observation (user code's metrics) leaves the session
+    # unserializable; a model that kept its training summary, which
+    # holds the session, could then not ship its predict UDF
     from pyspark.sql import Observation
 
     spark.range(3).observe(Observation(), F.count(F.lit(1))).collect()

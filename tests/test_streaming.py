@@ -677,6 +677,75 @@ def test_stream_to_catalog_maintains_pyramid(spark, tmp_path):
         assert level_map(cat, "pyr", z) == level_map(cat2, "pyr", z), z
 
 
+def test_stream_to_catalog_replays_failed_pyramid_step(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch whose pyramid upkeep fails after its commit is
+    re-delivered when the query restarts from its checkpoint: it
+    commits nothing twice and runs the upkeep again, so every level
+    equals a full rebuild. A new query (fresh checkpoint, batch ids
+    from 0 again) into the same layer commits its own batch 0."""
+    from biggis_landuse_spark.catalog import LayerCatalog
+    from biggis_landuse_spark.operators import pyramid
+    from biggis_landuse_spark.streaming.pixels import stream_to_catalog
+
+    cat = LayerCatalog(spark, str(tmp_path / "cat"))
+
+    def run(src, ckpt):
+        stream = spark.readStream.schema(PIXEL_DDL).parquet(src)
+        tiles = reassemble_tiles_stream(stream, cols=4, rows=4, n_bands=1)
+        q = stream_to_catalog(
+            tiles, cat, layer="pyr", cols=4, rows=4, zoom=2,
+            checkpoint=str(tmp_path / ckpt), maintain_pyramid_to=0,
+        ).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    path = str(tmp_path / "pyr_ingest")
+    _write_pixels(spark, path, _pixel_rows(0, 0, list(range(16))), mode="overwrite")
+    run(path, "ckpt")
+    real = pyramid.update_pyramid
+
+    def fail_once(*args, **kwargs):
+        monkeypatch.setattr(pyramid, "update_pyramid", real)
+        raise RuntimeError("pyramid upkeep failed")
+
+    monkeypatch.setattr(pyramid, "update_pyramid", fail_once)
+    _write_pixels(
+        spark, path, _pixel_rows(3, 2, list(range(16)), value_of=lambda i: i * 3)
+    )
+    with pytest.raises(Exception, match="pyramid upkeep failed"):
+        run(path, "ckpt")
+    run(path, "ckpt")  # restart: the failed batch is re-delivered
+    assert len(cat.store.versions("pyr", 2)) == 2
+
+    other = str(tmp_path / "other_ingest")
+    _write_pixels(
+        spark, other, _pixel_rows(1, 1, list(range(16)), value_of=lambda i: -i),
+        mode="overwrite",
+    )
+    run(other, "ckpt_other")
+    assert len(cat.store.versions("pyr", 2)) == 3
+
+    def level_map(c, z):
+        return {
+            (r["tile_col"], r["tile_row"]): r["tile"]["bands"]
+            for r in c.read_layer("pyr", z).collect()
+        }
+
+    assert set(level_map(cat, 2)) == {(0, 0), (3, 2), (1, 1)}
+    ref = LayerCatalog(spark, str(tmp_path / "ref"))
+    ref.write_layer(
+        cat.read_layer("pyr", 2).select("tile_col", "tile_row", "ts", "tile"),
+        "pyr", 2,
+    )
+    pyramid.build_pyramid(ref, "pyr", from_zoom=2, to_zoom=0)
+    for z in (0, 1, 2):
+        assert level_map(cat, z) == level_map(ref, z), z
+
+
 def test_stream_change_matrix_parity(spark, tmp_path):
     # epoch-B pixels stream in; transition counts against the static
     # epoch-A baseline must equal the batch computation
